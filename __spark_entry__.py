@@ -5836,13 +5836,11 @@ def q_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted store q_ivf_batch_query builds (each grid step is one
     partition-pruned batched scan). Rows-only: probe recall has no SQL
     twin; property gates in tests/test_lifecycle.py."""
-    import os
-
-    from faiss_vector_search_spark.operators import lifecycle
+    from faiss_vector_search_spark.operators import ivf, lifecycle
 
     q_ivf_batch_query(spark, sf_dir)  # ensure the store exists
     path = _IVFIDX_PATHS[sf_dir]
-    if not os.path.isdir(f"{path}/_meta"):  # watermark: trained on build corpus
+    if ivf._trained_on(spark, path) is None:  # watermark: trained on build corpus
         n = _t(spark, sf_dir, "embeddings").count()
         lifecycle.write_train_meta(spark, path, n)
     return lifecycle.index_health_report(

@@ -109,16 +109,12 @@ def save_ivfbin(
     centroids; assigning in float space before binarizing costs
     nothing extra here — the floats are already in hand at build
     time — and gives strictly better list placement)."""
-    from .ivf import assign_lists
+    from .ivf import _write_lists, assign_lists
 
     assigned = assign_lists(
         corpus, centroids, vec_col=vec_col, engine=assign_engine
     )
-    codes = binarize(assigned, vec_col=vec_col)
-    codes.write.mode("overwrite").partitionBy("list_id").parquet(
-        f"{path}/codes"
-    )
-    centroids.write.mode("overwrite").parquet(f"{path}/_centroids")
+    _write_lists(binarize(assigned, vec_col=vec_col), centroids, path, "codes")
 
 
 def ivfbin_search_persisted(
@@ -135,15 +131,9 @@ def ivfbin_search_persisted(
     Hamming ranking runs on the 32×-smaller codes. Scan cost =
     (nprobe/nlist) × 1/32 of a flat float scan's bytes — the
     cheapest tier in the index ladder."""
-    from .ivf import probe_lists
+    from .ivf import _open_probed
 
-    cents = spark.read.parquet(f"{path}/_centroids")
-    probe_ids = [
-        r.probe_cid for r in probe_lists(query, cents, nprobe).collect()
-    ]
-    codes = spark.read.parquet(f"{path}/codes").where(
-        F.col("list_id").isin(probe_ids)
-    )
+    codes, _ = _open_probed(spark, path, query, nprobe, "codes")
     return hamming_topk(codes, query_code, k=k, id_col=id_col)
 
 def binary_rerank_search(

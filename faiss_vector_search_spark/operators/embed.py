@@ -202,36 +202,9 @@ def _embed_documents_numpy(
         raise ValueError(
             f"keep_cols not in docs: {missing} (have {docs.columns})"
         )
-    import hashlib
-    import re
-
-    import numpy as np
     import pandas as pd
 
-    W1, b1, W2 = _mlp_weights()
-    tok_re = re.compile(r"[0-9a-z]+")
-
-    def featurize(texts) -> "np.ndarray":
-        # EXACTLY functions.hashing.md5_int(tok, seed=0) % dim — the
-        # same bucket the JVM feature-hash embedder assigns, so the
-        # model path's input features equal the baseline's and the
-        # topk-stability gate compares models, not tokenizers
-        x = np.zeros((len(texts), dim))
-        for row, t in enumerate(texts):
-            for tok in tok_re.findall((t or "").lower()):
-                h = hashlib.md5(("s0:" + tok).encode()).hexdigest()
-                x[row, int(h[:15], 16) % dim] += 1.0
-        return x
-
-    def forward(x: "np.ndarray") -> "np.ndarray":
-        # residual head: e = x + 0.5·MLP(x). A from-scratch random
-        # projection would scramble cosine neighborhoods; the residual
-        # keeps them correlated with the input features (pytest-gated
-        # topk stability) while still exercising a real forward pass —
-        # the shape fine-tuned encoders actually have. No-token rows
-        # (NULL/empty text) stay exactly zero: a zero vector scores
-        # cos=0 everywhere, so empty docs never match.
-        return numpy_forward(x, W1, b1, W2)
+    weights = _mlp_weights()
 
     def encode_batches(batches):
         for pdf in batches:
@@ -241,7 +214,9 @@ def _embed_documents_numpy(
             # not depend on where chunk boundaries fall (pytest-gated)
             for lo in range(0, len(pdf), batch_size):
                 chunk = pdf.iloc[lo:lo + batch_size]
-                emb = forward(featurize(chunk[text_col].tolist()))
+                emb = numpy_forward(
+                    md5_featurize(chunk[text_col].tolist(), dim), *weights
+                )
                 out = {id_col: chunk[id_col].values, "embedding": list(emb)}
                 for c in keep_cols:
                     out[c] = chunk[c].values
@@ -724,8 +699,7 @@ def chunk_index_build(
     # the first-batch quantizer has been outgrown
     spark = docs.sparkSession
     lifecycle.write_train_meta(
-        spark, path,
-        spark.read.parquet(f"{path}/vectors").count(),
+        spark, path, ivf_mod._scan_lists(spark, path).count()
     )
 
 
@@ -781,28 +755,20 @@ def chunk_search_persisted(
     parameters.
     """
     from . import ivf as ivf_mod
-    from ..functions import vector as V
+    from .knn import score_corpus
 
     qdf = spark.createDataFrame([(0, query_text)], f"qid int, {text_col} string")
     qv = embed_documents(
         qdf, dim=dim, id_col="qid", text_col=text_col, hash_fn=hash_fn
     ).select(F.col("embedding").alias("query_vec"))
-    cents = spark.read.parquet(f"{path}/_centroids")
-    probe_ids = [
-        r.probe_cid for r in ivf_mod.probe_lists(qv, cents, nprobe).collect()
-    ]
-    index = spark.read.parquet(f"{path}/vectors").where(
-        F.col("list_id").isin(probe_ids)
-    )
+    index, _ = ivf_mod._open_probed(spark, path, qv, nprobe)
     hits = (
-        index.crossJoin(F.broadcast(qv))
+        score_corpus(index, qv)
         .select(
             F.col("_ckey"),
             F.col("chunk"),
             F.col("list_id").cast("int").alias("list_id"),
-            F.round(
-                V.ip_score(F.col("embedding"), F.col("query_vec")), 6
-            ).alias("score"),
+            F.col("score"),
         )
         .orderBy(
             F.col("score").desc(),

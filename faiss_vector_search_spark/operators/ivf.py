@@ -8,11 +8,12 @@ Scale design (100 TB)
 Centroids are tiny (nlist × dim) → *broadcast*. List assignment is a
 per-row argmin over the broadcast centroid array — a pure map inside
 whole-stage codegen, **no shuffle of the corpus**. For a persisted
-index, `index_store.save_ivf` writes the corpus *partitioned by
-list_id*, so a search that probes `nprobe` of `nlist` lists prunes
+index, :func:`save_ivf` writes the corpus *partitioned by list_id*, so
+a search that probes `nprobe` of `nlist` lists prunes
 ``1 - nprobe/nlist`` of the parquet files at the scan (partition
 pruning — the Spark analogue of FAISS scanning only probed posting
-lists).
+lists). This module owns that persisted layout for every tier (see
+"persisted layout" below).
 
 Determinism: centroids here are "seeded" = the first ``nlist`` corpus
 vectors by id (a valid random-sample quantizer; FAISS also samples
@@ -29,7 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..functions import vector as V
-from .knn import SCORE_DECIMALS
+from ..io import path_exists
+from .knn import SCORE_DECIMALS, _score_col, score_corpus
 
 
 def seeded_centroids(
@@ -321,17 +323,21 @@ def ivf_search(
         assigned["list_id"] == probes["probe_cid"],
         "leftsemi",
     )
-    score = (
-        V.ip_score(F.col(vec_col), F.col("query_vec"))
-        if metric == "ip"
-        else V.l2_score(F.col(vec_col), F.col("query_vec"))
-    )
+    return _topk_scored(candidates, query, k, metric, id_col, vec_col)
+
+
+def _topk_scored(
+    rows: DataFrame, query: DataFrame, k: int, metric: str, id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(id, list_id, score) top-k of list-assigned rows against a
+    one-row query — the ranking every single-query IVF search shares."""
     return (
-        candidates.crossJoin(F.broadcast(query.select("query_vec")))
+        score_corpus(rows, query, metric=metric, vec_col=vec_col)
         .select(
             F.col(id_col),
-            F.col("list_id"),
-            F.round(score, SCORE_DECIMALS).alias("score"),
+            F.col("list_id").cast("int").alias("list_id"),
+            F.col("score"),
         )
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
         .limit(k)
@@ -357,6 +363,109 @@ def ivf_kmeans_search(
     )
 
 
+# --- persisted layout: every module reads and writes it through these ------
+# <path>/vectors (flat) or <path>/codes (PQ / SQ8 / binary), partitioned by
+# list_id, plus one-row-or-small parquet sidecars: _centroids, _codebooks
+# (PQ), _bounds (SQ8), _meta (PQ residual flag), _trained_on (watermark).
+
+
+def _read_sidecar(spark, path: str, name: str) -> DataFrame:
+    return spark.read.parquet(f"{path}/_{name}")
+
+
+def _write_sidecar(df: DataFrame, path: str, name: str) -> None:
+    df.write.mode("overwrite").parquet(f"{path}/_{name}")
+
+
+def _sidecar_value(spark, path: str, name: str, field: str):
+    """``field`` of a one-row sidecar; None when the sidecar is absent
+    or does not carry ``field``. A sidecar that exists but cannot be
+    read raises."""
+    if not path_exists(spark, f"{path}/_{name}"):
+        return None
+    df = _read_sidecar(spark, path, name)
+    row = df.first() if field in df.columns else None
+    return row[field] if row else None
+
+
+def _trained_on(spark, path: str):
+    """The train watermark, or None (indexes written before it had its
+    own sidecar kept it in ``_meta``)."""
+    return _sidecar_value(spark, path, "trained_on", "trained_on") or (
+        _sidecar_value(spark, path, "meta", "trained_on")
+    )
+
+
+def _index_exists(spark, path: str) -> bool:
+    return path_exists(spark, f"{path}/_centroids")
+
+
+def _scan_lists(
+    spark, path: str, list_ids=None, table: str = "vectors"
+) -> DataFrame:
+    """The index table pruned to ``list_ids`` (every list when None):
+    the ``IN`` filter on the partition column reaches the parquet scan
+    as a partition filter, so other list directories are never read."""
+    rows = spark.read.parquet(f"{path}/{table}")
+    if list_ids is None:
+        return rows
+    return rows.where(F.col("list_id").isin(list_ids))
+
+
+def _open_probed(
+    spark, path: str, query: DataFrame, nprobe: int,
+    table: str = "vectors", query_vec_col: str = "query_vec",
+):
+    """Open a persisted index for one query: probe the saved centroids
+    (one bounded collect of ``nprobe`` ids) and return the table pruned
+    to those lists, with the probe ids."""
+    cents = _read_sidecar(spark, path, "centroids")
+    probe_ids = [
+        r.probe_cid
+        for r in probe_lists(query, cents, nprobe, query_vec_col).collect()
+    ]
+    return _scan_lists(spark, path, probe_ids, table), probe_ids
+
+
+def _write_lists(
+    rows: DataFrame, centroids: DataFrame, path: str,
+    table: str = "vectors", **sidecars: DataFrame,
+) -> None:
+    """Overwrite the index: ``rows`` partitioned by ``list_id`` under
+    ``<path>/<table>``, then the centroids and each named sidecar."""
+    rows.write.mode("overwrite").partitionBy("list_id").parquet(
+        f"{path}/{table}"
+    )
+    for name, df in {"centroids": centroids, **sidecars}.items():
+        _write_sidecar(df, path, name)
+
+
+def _append(
+    spark, path: str, new: DataFrame, id_col: str, vec_col: str,
+    table: str = "vectors", encode=None,
+) -> list[int]:
+    """Every tier's incremental add: assign ``new`` against the SAVED
+    centroids (no retrain), apply the tier's ``encode`` step, dedup by
+    id against the touched list partitions only, and append new files
+    to just those partitions. Returns the touched list ids."""
+    rows = assign_lists(
+        new, _read_sidecar(spark, path, "centroids"), vec_col=vec_col
+    )
+    if encode is not None:
+        rows = encode(rows)
+    touched = sorted(
+        r.list_id for r in rows.select("list_id").distinct().collect()
+    )
+    if not touched:
+        return []
+    existing = _scan_lists(spark, path, touched, table)
+    fresh = rows.join(existing.select(id_col), on=id_col, how="left_anti")
+    fresh.write.mode("append").partitionBy("list_id").parquet(
+        f"{path}/{table}"
+    )
+    return touched
+
+
 def save_ivf(
     corpus: DataFrame,
     centroids: DataFrame,
@@ -370,13 +479,10 @@ def save_ivf(
     session reopens the index without retraining.
     ``assign_engine`` → :func:`assign_lists` (production builds use
     "arrow")."""
-    from .index_store import save_index
-
-    assigned = assign_lists(
-        corpus, centroids, vec_col=vec_col, engine=assign_engine
+    _write_lists(
+        assign_lists(corpus, centroids, vec_col=vec_col, engine=assign_engine),
+        centroids, path,
     )
-    save_index(assigned, f"{path}/vectors", partition_by="list_id")
-    centroids.write.mode("overwrite").parquet(f"{path}/_centroids")
 
 
 def ivf_search_persisted(
@@ -396,28 +502,8 @@ def ivf_search_persisted(
     This is the plan FAISS's scan-only-probed-posting-lists becomes on
     a cluster: scan fraction = nprobe/nlist of the files, zero
     compute on unprobed lists."""
-    cents = spark.read.parquet(f"{path}/_centroids")
-    probe_ids = [
-        r.probe_cid for r in probe_lists(query, cents, nprobe).collect()
-    ]
-    index = spark.read.parquet(f"{path}/vectors").where(
-        F.col("list_id").isin(probe_ids)
-    )
-    score = (
-        V.ip_score(F.col(vec_col), F.col("query_vec"))
-        if metric == "ip"
-        else V.l2_score(F.col(vec_col), F.col("query_vec"))
-    )
-    return (
-        index.crossJoin(F.broadcast(query.select("query_vec")))
-        .select(
-            F.col(id_col),
-            F.col("list_id").cast("int").alias("list_id"),
-            F.round(score, SCORE_DECIMALS).alias("score"),
-        )
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    index, _ = _open_probed(spark, path, query, nprobe)
+    return _topk_scored(index, query, k, metric, id_col, vec_col)
 
 
 def ivf_search_persisted_batch(
@@ -476,7 +562,7 @@ def ivf_search_persisted_batch_probed(
     scan prunes to the SAME probed lists: sharing the union keeps the
     whole mining call at ONE bounded centroid-probe job instead of
     re-running the crossJoin + window + collect a second time."""
-    cents = spark.read.parquet(f"{path}/_centroids")
+    cents = _read_sidecar(spark, path, "centroids")
     probes = (
         queries.select(query_id_col, query_vec_col)
         .crossJoin(F.broadcast(cents))
@@ -509,14 +595,8 @@ def ivf_search_persisted_batch_probed(
         )
         .join(queries.select(query_id_col, query_vec_col), on=query_id_col)
     )
-    index = spark.read.parquet(f"{path}/vectors").where(
-        F.col("list_id").isin(all_lists)
-    )
-    score = (
-        V.ip_score(F.col(vec_col), F.col(query_vec_col))
-        if metric == "ip"
-        else V.l2_score(F.col(vec_col), F.col(query_vec_col))
-    )
+    index = _scan_lists(spark, path, all_lists)
+    score = _score_col(metric, F.col(vec_col), F.col(query_vec_col))
     scored = index.join(
         F.broadcast(qmap), index["list_id"] == qmap["_probe_cid"]
     ).select(

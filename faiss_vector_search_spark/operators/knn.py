@@ -327,11 +327,7 @@ def knn_classify_persisted(
         id_col=id_col, vec_col=vec_col,
         query_id_col=query_id_col, query_vec_col=query_vec_col,
     )
-    labels = (
-        spark.read.parquet(f"{path}/vectors")
-        .where(F.col("list_id").isin(probed))
-        .select(id_col, label_col)
-    )
+    labels = ivf_mod._scan_lists(spark, path, probed).select(id_col, label_col)
     pool = labels.join(F.broadcast(cand), id_col).where(
         F.col(id_col) != F.col(query_id_col)
     )
@@ -386,11 +382,7 @@ def hard_negatives_persisted(
         metric=metric, id_col=id_col, vec_col=vec_col,
         query_id_col=query_id_col, query_vec_col=query_vec_col,
     )
-    labels = (
-        spark.read.parquet(f"{path}/vectors")
-        .where(F.col("list_id").isin(probed))
-        .select(id_col, label_col)
-    )
+    labels = ivf_mod._scan_lists(spark, path, probed).select(id_col, label_col)
     alab = F.broadcast(
         anchors.select(
             F.col(query_id_col),
@@ -454,11 +446,7 @@ def training_triplets_persisted(
         id_col=id_col, vec_col=vec_col,
         query_id_col=query_id_col, query_vec_col=query_vec_col,
     )
-    labels = (
-        spark.read.parquet(f"{path}/vectors")
-        .where(F.col("list_id").isin(probed))
-        .select(id_col, label_col)
-    )
+    labels = ivf_mod._scan_lists(spark, path, probed).select(id_col, label_col)
     alab = F.broadcast(
         anchors.select(
             F.col(query_id_col), F.col(query_label_col).alias("_qlab")
@@ -503,7 +491,7 @@ def training_triplets_persisted(
     )
 
 
-def _threshold_hits(
+def _threshold_grid(
     corpus: DataFrame,
     query: DataFrame,
     k: int,
@@ -512,24 +500,35 @@ def _threshold_hits(
     id_col: str,
     vec_col: str,
     initial_threshold: float,
-):
-    """(candidates, per-threshold hit counts) shared by the dynamic
-    search and the progression report. Grid t = i·step for
-    i·step ≤ initial_threshold, in double, matching the oracle."""
+) -> DataFrame:
+    """ONE row shared by the dynamic search and the progression report:
+    ``cand`` = the top-k candidates as array<struct<id, score>>, and
+    ``grid`` = array<struct<hits, t>> with t = i·step for i·step ≤
+    initial_threshold (in double, matching the oracle) and hits = the
+    candidates scoring ≥ t. The candidate plan runs once; the hit
+    counts and the final filter are array functions on that row."""
     n_steps = int(round(1.0 / step))
     cand = topk(corpus, query, k=k, metric=metric, id_col=id_col, vec_col=vec_col)
-    grid = (
-        cand.sparkSession.range(0, n_steps + 1)
-        .select((F.col("id") / F.lit(float(n_steps))).alias("t"))
-        .where(F.col("t") <= initial_threshold)
+    ts = F.filter(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(n_steps)),
+            lambda i: i / F.lit(float(n_steps)),
+        ),
+        lambda t: t <= initial_threshold,
     )
-    hits = (
-        cand.crossJoin(F.broadcast(grid))
-        .where(F.col("score") >= F.col("t"))
-        .groupBy("t")
-        .agg(F.count("*").alias("hits"))
+    return cand.agg(
+        F.collect_list(F.struct(id_col, "score")).alias("cand")
+    ).select(
+        "cand",
+        F.transform(
+            ts,
+            lambda t: F.struct(
+                F.size(F.filter("cand", lambda c: c["score"] >= t))
+                .cast("long").alias("hits"),
+                t.alias("t"),
+            ),
+        ).alias("grid"),
     )
-    return cand, hits
 
 
 def dynamic_threshold_search(
@@ -556,33 +555,34 @@ def dynamic_threshold_search(
     maximized hits. Return the candidates at that final threshold.
 
     The loop is data-independent given the candidate scores, so ONE
-    pass computes it: build the threshold grid, count hits per
-    threshold, pick the final threshold with an aggregate, filter.
+    pass computes it: gather the k candidates into one row, count hits
+    per grid threshold, pick the final threshold, keep the survivors.
     No iteration, no repeated scans — O(k × grid) work after the
     single corpus scan that produced the candidates.
     """
-    cand, hits = _threshold_hits(
+    row = _threshold_grid(
         corpus, query, k, step, metric, id_col, vec_col, initial_threshold
     )
-    if min_threshold > 0.0:
-        hits = hits.where(F.col("t") >= min_threshold)
+    # a threshold no candidate reaches is never the final one
+    tried = F.filter(
+        "grid", lambda g: (g["hits"] > 0) & (g["t"] >= min_threshold)
+    )
     # Final threshold: highest t reaching the target, else the highest
     # t among those with maximal hits (reference keeps the FIRST best
     # while walking DOWN, i.e. the highest such t).
-    final = F.broadcast(
-        hits.select(
-            F.coalesce(
-                F.max(F.when(F.col("hits") >= hit_target, F.col("t"))),
-                F.max_by(F.col("t"), F.struct(F.col("hits"), F.col("t"))),
-            ).alias("final_t")
-        )
+    final_t = F.coalesce(
+        F.array_max(
+            F.transform(
+                F.filter(tried, lambda g: g["hits"] >= hit_target),
+                lambda g: g["t"],
+            )
+        ),
+        F.array_max(tried)["t"],
     )
     return (
-        cand.crossJoin(final)
-        .where(F.col("score") >= F.col("final_t"))
+        row.withColumn("final_t", final_t)
         .select(
-            id_col,
-            "score",
+            F.inline(F.filter("cand", lambda c: c["score"] >= F.col("final_t"))),
             F.round(F.col("final_t"), SCORE_DECIMALS).alias("final_threshold"),
         )
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
@@ -790,23 +790,15 @@ def dynamic_threshold_progression(
     one row per grid threshold — including zero-hit attempts, which the
     reference logs too — highest first. The same data its UI progress
     callbacks stream, computed in one pass."""
-    n_steps = int(round(1.0 / step))
-    _, hits = _threshold_hits(
+    row = _threshold_grid(
         corpus, query, k, step, metric, id_col, vec_col, initial_threshold
     )
-    grid = (
-        corpus.sparkSession.range(0, n_steps + 1)
-        .select((F.col("id") / F.lit(float(n_steps))).alias("t"))
-        .where(F.col("t") <= initial_threshold)
-    )
     return (
-        grid.join(hits, "t", "left")
+        row.select(F.inline("grid"))
         .select(
             F.round(F.col("t"), SCORE_DECIMALS).alias("threshold"),
-            F.coalesce(F.col("hits"), F.lit(0)).alias("hits"),
-            (F.coalesce(F.col("hits"), F.lit(0)) >= hit_target).alias(
-                "target_reached"
-            ),
+            F.col("hits"),
+            (F.col("hits") >= hit_target).alias("target_reached"),
         )
         .orderBy(F.col("threshold").desc())
     )

@@ -7,7 +7,13 @@ The flat store already has :func:`index_store.add_vectors` (union +
 anti-join). These operators extend the same append semantics to the
 PERSISTED, list-partitioned tiers (ivf.save_ivf / pq.save_ivfpq /
 sq.save_ivfsq / binary.save_ivfbin), where the point of the layout is
-that a write must not touch what a probe would not read:
+that a write must not touch what a probe would not read. The layout
+itself — the list-partitioned ``vectors``/``codes`` table plus the
+``_centroids``, ``_codebooks`` (PQ), ``_bounds`` (SQ8), ``_meta`` (PQ
+residual flag) and ``_trained_on`` (train watermark) sidecars — is
+owned by :mod:`.ivf`; this module reads and writes it only through
+ivf's helpers, and every tier's append is ``ivf._append`` with the
+tier's encode step:
 
 - **append**: the new batch coarse-assigns against the SAVED centroids
   (map-only, no retrain), encodes with the SAVED codebooks/bounds where
@@ -38,31 +44,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _append_to_lists(
-    spark: SparkSession,
-    table_path: str,
-    assigned_new: DataFrame,
-    id_col: str,
-) -> list[int]:
-    """Shared tail of every tier's append: dedup against the touched
-    partitions only, append-mode write (new files only). Returns the
-    touched list ids."""
-    touched = sorted(
-        r.list_id
-        for r in assigned_new.select("list_id").distinct().collect()
-    )
-    if not touched:
-        return []
-    existing = spark.read.parquet(table_path).where(
-        F.col("list_id").isin(touched)
-    )
-    fresh = assigned_new.join(
-        existing.select(id_col), on=id_col, how="left_anti"
-    )
-    fresh.write.mode("append").partitionBy("list_id").parquet(table_path)
-    return touched
-
-
 def ivf_append(
     spark: SparkSession,
     path: str,
@@ -73,11 +54,9 @@ def ivf_append(
     """Incremental add into a persisted IVF-flat index (ivf.save_ivf
     layout): assign with the saved centroids, append to the touched
     list partitions. Returns the touched list ids."""
-    from .ivf import assign_lists
+    from .ivf import _append
 
-    cents = spark.read.parquet(f"{path}/_centroids")
-    assigned = assign_lists(new, cents, vec_col=vec_col)
-    return _append_to_lists(spark, f"{path}/vectors", assigned, id_col)
+    return _append(spark, path, new, id_col, vec_col)
 
 
 def ivfpq_append(
@@ -91,17 +70,17 @@ def ivfpq_append(
     layout): assign with the saved coarse centroids, PQ-encode with the
     saved codebooks (codes quantize the raw vector, so the shared
     codebooks stay valid for appended rows), append to touched lists."""
-    from .ivf import assign_lists
+    from .ivf import _append, _read_sidecar
     from .pq import pq_encode
 
-    cents = spark.read.parquet(f"{path}/_centroids")
-    books = spark.read.parquet(f"{path}/_codebooks")
-    assigned = assign_lists(new, cents, vec_col=vec_col)
-    codes = pq_encode(
-        assigned, books, id_col=id_col, vec_col=vec_col,
-        keep_cols=("list_id",),
+    books = _read_sidecar(spark, path, "codebooks")
+    return _append(
+        spark, path, new, id_col, vec_col, table="codes",
+        encode=lambda rows: pq_encode(
+            rows, books, id_col=id_col, vec_col=vec_col,
+            keep_cols=("list_id",),
+        ),
     )
-    return _append_to_lists(spark, f"{path}/codes", codes, id_col)
 
 
 def ivfsq_append(
@@ -117,17 +96,17 @@ def ivfsq_append(
     trained [min,max] clamps to the boundary code (sq._code_expr
     floors/leasts) — drift past the bounds is a retrain trigger, not a
     correctness break."""
-    from .ivf import assign_lists
+    from .ivf import _append, _read_sidecar
     from .sq import sq_encode
 
-    cents = spark.read.parquet(f"{path}/_centroids")
-    bounds = spark.read.parquet(f"{path}/_bounds")
-    assigned = assign_lists(new, cents, vec_col=vec_col)
-    codes = sq_encode(
-        assigned, bounds, id_col=id_col, vec_col=vec_col,
-        keep_cols=("list_id",),
+    bounds = _read_sidecar(spark, path, "bounds")
+    return _append(
+        spark, path, new, id_col, vec_col, table="codes",
+        encode=lambda rows: sq_encode(
+            rows, bounds, id_col=id_col, vec_col=vec_col,
+            keep_cols=("list_id",),
+        ),
     )
-    return _append_to_lists(spark, f"{path}/codes", codes, id_col)
 
 
 def ivfbin_append(
@@ -141,12 +120,12 @@ def ivfbin_append(
     (binary.save_ivfbin layout): float-space assignment against the
     saved centroids, sign-bit pack, append to touched lists."""
     from .binary import binarize
-    from .ivf import assign_lists
+    from .ivf import _append
 
-    cents = spark.read.parquet(f"{path}/_centroids")
-    assigned = assign_lists(new, cents, vec_col=vec_col)
-    codes = binarize(assigned, vec_col=vec_col)
-    return _append_to_lists(spark, f"{path}/codes", codes, id_col)
+    return _append(
+        spark, path, new, id_col, vec_col, table="codes",
+        encode=lambda rows: binarize(rows, vec_col=vec_col),
+    )
 
 
 def write_train_meta(
@@ -154,9 +133,12 @@ def write_train_meta(
 ) -> None:
     """Record the corpus size the current quantizer was trained on —
     the watermark :func:`should_retrain` compares against."""
-    spark.createDataFrame(
-        [(int(trained_on),)], "trained_on bigint"
-    ).write.mode("overwrite").parquet(f"{path}/_meta")
+    from .ivf import _write_sidecar
+
+    _write_sidecar(
+        spark.createDataFrame([(int(trained_on),)], "trained_on bigint"),
+        path, "trained_on",
+    )
 
 
 def should_retrain(
@@ -172,16 +154,13 @@ def should_retrain(
     quantizer trains once ≥100 vectors arrive. The persisted-tier
     analogue: retrain when ntotal has grown past ``growth_factor ×``
     the size the centroids were trained on (watermark in
-    ``<path>/_meta``; absent watermark falls back to the reference's
-    min-points rule). The count is a metadata-only scan of the
-    partitioned table — no vector data is read."""
-    ntotal = spark.read.parquet(f"{path}/{table}").count()
-    try:
-        trained_on = (
-            spark.read.parquet(f"{path}/_meta").first().trained_on
-        )
-    except Exception:
-        trained_on = None
+    ``<path>/_trained_on``; absent watermark falls back to the
+    reference's min-points rule). The count is a metadata-only scan of
+    the partitioned table — no vector data is read."""
+    from .ivf import _scan_lists, _trained_on
+
+    ntotal = _scan_lists(spark, path, table=table).count()
+    trained_on = _trained_on(spark, path)
     if not trained_on:
         return ntotal >= min_train_points
     return ntotal >= growth_factor * trained_on
@@ -223,15 +202,15 @@ def index_health_report(
       re-assignment. ``recommended_nprobe`` = -1 if even a full scan
       misses the target (only possible under sampling noise).
     - **retrain verdict**: :func:`should_retrain` against the
-      ``_meta`` watermark (growth_ratio = -1 when no watermark).
+      ``_trained_on`` watermark (growth_ratio = -1 when no watermark).
 
     Rows-only by design (kmeans assignment + probe recall have no SQL
     twin); gated by tests/test_lifecycle.py properties instead.
     """
-    from .ivf import ivf_search_persisted_batch
+    from .ivf import _scan_lists, _trained_on, ivf_search_persisted_batch
     from ..functions import vector as V
 
-    vecs = spark.read.parquet(f"{path}/vectors")
+    vecs = _scan_lists(spark, path)
     sizes = {
         r["list_id"]: r["n"]
         for r in vecs.groupBy("list_id").agg(F.count("*").alias("n")).collect()
@@ -295,10 +274,7 @@ def index_health_report(
             break
         rec_recall = max(rec_recall, rc)
 
-    try:
-        trained_on = spark.read.parquet(f"{path}/_meta").first().trained_on
-    except Exception:
-        trained_on = None
+    trained_on = _trained_on(spark, path)
     growth = round(ntotal / trained_on, 4) if trained_on else -1.0
     retrain = should_retrain(spark, path, growth_factor=growth_factor)
 
@@ -343,15 +319,11 @@ def retrain_ivf(
     (Spark cannot overwrite a path it is still reading); a production
     deployment would instead write a new snapshot version
     (maintenance.write_snapshot) and flip readers atomically."""
-    from .ivf import kmeans_centroids, save_ivf
+    from .ivf import _read_sidecar, _scan_lists, kmeans_centroids, save_ivf
 
-    vecs = (
-        spark.read.parquet(f"{path}/vectors")
-        .drop("list_id")
-        .localCheckpoint()
-    )
+    vecs = _scan_lists(spark, path).drop("list_id").localCheckpoint()
     if nlist is None:
-        nlist = spark.read.parquet(f"{path}/_centroids").count()
+        nlist = _read_sidecar(spark, path, "centroids").count()
     # engine/train_sample: the production retrain profile (arrow BLAS
     # Lloyd over a bounded id-strided sample) — the same knobs the
     # scale rehearsal forced on first-time training

@@ -507,7 +507,7 @@ def save_ivfpq(
     search adds the per-list ⟨c, q⟩ offset back, which the persisted
     ``_meta`` records so a later session reopens correctly).
     """
-    from .ivf import assign_lists
+    from .ivf import _write_lists, assign_lists
 
     if residual:
         assigned = ivf_residual_frame(
@@ -522,15 +522,12 @@ def save_ivfpq(
         assigned, codebooks, id_col=id_col, vec_col=vec_col,
         keep_cols=("list_id",), engine=encode_engine,
     )
-    codes.write.mode("overwrite").partitionBy("list_id").parquet(
-        f"{path}/codes"
-    )
-    centroids.write.mode("overwrite").parquet(f"{path}/_centroids")
-    codebooks.write.mode("overwrite").parquet(f"{path}/_codebooks")
-    spark = corpus.sparkSession
-    spark.createDataFrame(
+    flag = corpus.sparkSession.createDataFrame(
         [(bool(residual),)], "residual boolean"
-    ).write.mode("overwrite").parquet(f"{path}/_meta")
+    )
+    _write_lists(
+        codes, centroids, path, "codes", codebooks=codebooks, meta=flag
+    )
 
 
 def ivfpq_search_persisted(
@@ -548,21 +545,14 @@ def ivfpq_search_persisted(
     (nprobe/nlist) × (m bytes / 4·dim bytes) of a flat float scan —
     at nlist=16, nprobe=4, m=16 on 64-dim floats that is 1/64 of the
     bytes a flat search reads."""
-    from .ivf import probe_lists
+    from .ivf import _open_probed, _read_sidecar, _sidecar_value
 
-    cents = spark.read.parquet(f"{path}/_centroids")
-    books = spark.read.parquet(f"{path}/_codebooks")
-    try:
-        residual = spark.read.parquet(f"{path}/_meta").first().residual
-    except Exception:  # pre-residual index layout: raw codes
-        residual = False
-    probe_ids = [
-        r.probe_cid for r in probe_lists(query, cents, nprobe).collect()
-    ]
-    codes = spark.read.parquet(f"{path}/codes").where(
-        F.col("list_id").isin(probe_ids)
+    codes, probe_ids = _open_probed(
+        spark, path, query, nprobe, "codes", query_vec_col
     )
-    if not residual:
+    books = _read_sidecar(spark, path, "codebooks")
+    # no flag (a pre-residual index layout) reads as raw codes
+    if not _sidecar_value(spark, path, "meta", "residual"):
         return pq_topk_adc(
             codes, books, query, k=k, id_col=id_col,
             query_vec_col=query_vec_col,
@@ -571,7 +561,8 @@ def ivfpq_search_persisted(
     # constants ride in as a broadcast (nprobe rows), the residual ADC
     # shares ONE query LUT across lists
     offs = (
-        cents.where(F.col("cid").isin(probe_ids))
+        _read_sidecar(spark, path, "centroids")
+        .where(F.col("cid").isin(probe_ids))
         .crossJoin(F.broadcast(query))
         .select(
             F.col("cid").alias("list_id"),

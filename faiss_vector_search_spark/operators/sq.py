@@ -232,7 +232,7 @@ def save_ivfsq(
     Codes quantize the RAW vector against global bounds (not the
     list residual), so one bounds row serves every list and
     :func:`sq_topk` runs unchanged on any probe union."""
-    from .ivf import assign_lists
+    from .ivf import _write_lists, assign_lists
 
     assigned = assign_lists(
         corpus, centroids, vec_col=vec_col, engine=assign_engine
@@ -241,11 +241,7 @@ def save_ivfsq(
         assigned, bounds, id_col=id_col, vec_col=vec_col,
         keep_cols=("list_id",),
     )
-    codes.write.mode("overwrite").partitionBy("list_id").parquet(
-        f"{path}/codes"
-    )
-    centroids.write.mode("overwrite").parquet(f"{path}/_centroids")
-    bounds.write.mode("overwrite").parquet(f"{path}/_bounds")
+    _write_lists(codes, centroids, path, "codes", bounds=bounds)
 
 
 def ivfsq_search_persisted(
@@ -262,17 +258,10 @@ def ivfsq_search_persisted(
     coarse centroids, prune the codes scan to those list partitions,
     decode-and-rank inside them. Scan cost = (nprobe/nlist) × 1/4 of
     a flat float scan's bytes. ``engine`` → :func:`sq_topk`."""
-    from .ivf import probe_lists
+    from .ivf import _open_probed, _read_sidecar
 
-    cents = spark.read.parquet(f"{path}/_centroids")
-    bounds = spark.read.parquet(f"{path}/_bounds")
-    probe_ids = [
-        r.probe_cid for r in probe_lists(query, cents, nprobe).collect()
-    ]
-    codes = spark.read.parquet(f"{path}/codes").where(
-        F.col("list_id").isin(probe_ids)
-    )
+    codes, _ = _open_probed(spark, path, query, nprobe, "codes", query_vec_col)
     return sq_topk(
-        codes, bounds, query, k=k, id_col=id_col,
+        codes, _read_sidecar(spark, path, "bounds"), query, k=k, id_col=id_col,
         query_vec_col=query_vec_col, engine=engine,
     )

@@ -815,8 +815,8 @@ def streaming_chunk_index_ingest(
     Serving (:func:`~..operators.embed.chunk_search_persisted`) reads
     the same path mid-ingest — readers see whole parquet files only.
     """
-    from ..io import path_exists
     from ..operators import embed as embed_mod
+    from ..operators.ivf import _index_exists
 
     docs = (
         spark.readStream.schema(DOC_SCHEMA)
@@ -827,7 +827,7 @@ def streaming_chunk_index_ingest(
                   dim=dim, hash_fn=hash_fn)
 
     def ingest(batch: DataFrame, batch_id: int) -> None:
-        if not path_exists(spark, f"{index_path}/_centroids"):
+        if not _index_exists(spark, index_path):
             embed_mod.chunk_index_build(
                 batch, index_path, nlist=nlist, **params
             )

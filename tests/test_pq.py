@@ -329,3 +329,35 @@ class TestResidualIVFPQ:
         )
         out = pq.ivfpq_search_persisted(spark, f"{base}/i", q, nprobe=4, k=5)
         assert out.count() == 5
+
+    def test_train_watermark_keeps_residual_flag(
+        self, spark, clustered, trained, tmp_path_factory
+    ):
+        """The train watermark and the residual flag are separate
+        sidecars: recording the watermark on a residual index leaves
+        its search results unchanged, and should_retrain reads it."""
+        from faiss_vector_search_spark.operators import lifecycle
+
+        path = str(tmp_path_factory.mktemp("resivfpq4") / "i")
+        res_frame = pq.ivf_residual_frame(clustered, trained)
+        books = pq.pq_train(res_frame, m=8, ksub=32, iters=4)
+        pq.save_ivfpq(clustered, trained, books, path, residual=True)
+        q = clustered.where(F.col("vec_id") == 7).select(
+            F.col("embedding").alias("query_vec")
+        )
+
+        def search():
+            return [
+                (r.vec_id, r.score)
+                for r in pq.ivfpq_search_persisted(
+                    spark, path, q, nprobe=4, k=5
+                ).collect()
+            ]
+
+        before = search()
+        # no watermark yet: the reference's 100-point rule decides
+        assert lifecycle.should_retrain(spark, path, table="codes")
+        lifecycle.write_train_meta(spark, path, 1200)
+        assert search() == before
+        # 1200 rows against a 1200-row watermark: no retrain
+        assert not lifecycle.should_retrain(spark, path, table="codes")
