@@ -29,6 +29,8 @@ Operator modules (``faiss_vector_search_spark.operators.*``):
                   scaling, exact+HLL distinct, JSON rollup, quantiles
 - ``index_store`` save / load / clear / add_vectors / stats /
                   reconstruct / remove_vectors
+- ``lifecycle``   one ``append`` for every persisted IVF tier, retrain
+                  guard, index health report
 - ``pq``          product quantization: train / encode / ADC search /
                   rerank / persisted IVF-PQ
 - ``sq``          SQ8 scalar quantization: bounds train / encode /

@@ -114,7 +114,14 @@ def save_ivfbin(
     assigned = assign_lists(
         corpus, centroids, vec_col=vec_col, engine=assign_engine
     )
-    _write_lists(binarize(assigned, vec_col=vec_col), centroids, path, "codes")
+    codes = encode_lists(assigned, centroids, id_col, vec_col)
+    _write_lists(codes, centroids, path, "binary")
+
+
+def encode_lists(assigned, centroids, id_col, vec_col) -> DataFrame:
+    """IVF-binary's list-encode step (:func:`save_ivfbin` and every
+    append; the tiers' shared signature): sign-pack the float vector."""
+    return binarize(assigned, vec_col=vec_col)
 
 
 def ivfbin_search_persisted(
@@ -133,7 +140,7 @@ def ivfbin_search_persisted(
     cheapest tier in the index ladder."""
     from .ivf import _open_probed
 
-    codes, _ = _open_probed(spark, path, query, nprobe, "codes")
+    codes, _ = _open_probed(spark, path, query, nprobe, "binary")
     return hamming_topk(codes, query_code, k=k, id_col=id_col)
 
 def binary_rerank_search(

@@ -1722,7 +1722,7 @@ def neardup_index_append(
     """Incrementally add a batch to a persisted near-dup index: new
     band rows land ONLY in their own (band, bucket) partitions
     (append, untouched partitions never rewritten — the
-    lifecycle.ivf_append posture), new shingle rows append."""
+    lifecycle.append posture), new shingle rows append."""
     spark = docs.sparkSession
     meta = spark.read.parquet(f"{path}/_meta").first()
     sig = minhash_signatures(

@@ -718,14 +718,14 @@ def chunk_index_append(
     """Incremental add of new documents into a persisted chunk index:
     chunk + embed the batch, assign against the SAVED centroids, and
     append only into the touched ``list_id`` partitions
-    (lifecycle.ivf_append — untouched list directories stay
+    (lifecycle.append — untouched list directories stay
     byte-stable, pytest-gated). Returns the touched list ids."""
     from . import lifecycle
 
     rows = _chunk_index_rows(
         docs, min_size, max_size, overlap, dim, hash_fn, id_col, text_col
     )
-    return lifecycle.ivf_append(spark, path, rows, id_col="_ckey")
+    return lifecycle.append(spark, path, rows, id_col="_ckey")
 
 
 def chunk_search_persisted(

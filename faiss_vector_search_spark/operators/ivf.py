@@ -369,6 +369,22 @@ def ivf_kmeans_search(
 # (PQ), _bounds (SQ8), _meta (PQ residual flag), _trained_on (watermark).
 
 
+def _table(tier: str) -> str:
+    return "vectors" if tier == "flat" else "codes"
+
+
+def _tier(spark, path: str) -> str:
+    """The tier of the index at ``path``, read from its layout with
+    driver-side existence checks (no Spark job; one check for flat)."""
+    if path_exists(spark, f"{path}/vectors"):
+        return "flat"
+    if not path_exists(spark, f"{path}/codes"):
+        raise ValueError(f"no persisted IVF index at {path}")
+    if path_exists(spark, f"{path}/_codebooks"):
+        return "pq"
+    return "sq8" if path_exists(spark, f"{path}/_bounds") else "binary"
+
+
 def _read_sidecar(spark, path: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{path}/_{name}")
 
@@ -388,6 +404,21 @@ def _sidecar_value(spark, path: str, name: str, field: str):
     return row[field] if row else None
 
 
+def _read_centroids(spark, path: str) -> DataFrame:
+    return _read_sidecar(spark, path, "centroids")
+
+
+def _read_model(spark, path: str, tier: str) -> dict:
+    """The tier's saved ``encode_lists`` keyword arguments (no residual
+    flag, a pre-residual PQ layout, reads as raw codes)."""
+    if tier == "pq":
+        return {"codebooks": _read_sidecar(spark, path, "codebooks"),
+                "residual": bool(_sidecar_value(spark, path, "meta", "residual"))}
+    if tier == "sq8":
+        return {"bounds": _read_sidecar(spark, path, "bounds")}
+    return {}
+
+
 def _trained_on(spark, path: str):
     """The train watermark, or None (indexes written before it had its
     own sidecar kept it in ``_meta``)."""
@@ -396,17 +427,22 @@ def _trained_on(spark, path: str):
     )
 
 
+def _write_trained_on(spark, path: str, trained_on: int) -> None:
+    df = spark.createDataFrame([(int(trained_on),)], "trained_on bigint")
+    _write_sidecar(df, path, "trained_on")
+
+
 def _index_exists(spark, path: str) -> bool:
     return path_exists(spark, f"{path}/_centroids")
 
 
 def _scan_lists(
-    spark, path: str, list_ids=None, table: str = "vectors"
+    spark, path: str, list_ids=None, tier: str = "flat"
 ) -> DataFrame:
     """The index table pruned to ``list_ids`` (every list when None):
     the ``IN`` filter on the partition column reaches the parquet scan
     as a partition filter, so other list directories are never read."""
-    rows = spark.read.parquet(f"{path}/{table}")
+    rows = spark.read.parquet(f"{path}/{_table(tier)}")
     if list_ids is None:
         return rows
     return rows.where(F.col("list_id").isin(list_ids))
@@ -414,54 +450,61 @@ def _scan_lists(
 
 def _open_probed(
     spark, path: str, query: DataFrame, nprobe: int,
-    table: str = "vectors", query_vec_col: str = "query_vec",
+    tier: str = "flat", query_vec_col: str = "query_vec",
 ):
     """Open a persisted index for one query: probe the saved centroids
     (one bounded collect of ``nprobe`` ids) and return the table pruned
     to those lists, with the probe ids."""
-    cents = _read_sidecar(spark, path, "centroids")
+    cents = _read_centroids(spark, path)
     probe_ids = [
         r.probe_cid
         for r in probe_lists(query, cents, nprobe, query_vec_col).collect()
     ]
-    return _scan_lists(spark, path, probe_ids, table), probe_ids
+    return _scan_lists(spark, path, probe_ids, tier), probe_ids
 
 
 def _write_lists(
-    rows: DataFrame, centroids: DataFrame, path: str,
-    table: str = "vectors", **sidecars: DataFrame,
+    rows: DataFrame, centroids: DataFrame, path: str, tier: str = "flat",
+    **model,
 ) -> None:
     """Overwrite the index: ``rows`` partitioned by ``list_id`` under
-    ``<path>/<table>``, then the centroids and each named sidecar."""
+    the tier's table, then the centroids and the ``model`` sidecars."""
     rows.write.mode("overwrite").partitionBy("list_id").parquet(
-        f"{path}/{table}"
+        f"{path}/{_table(tier)}"
     )
-    for name, df in {"centroids": centroids, **sidecars}.items():
+    if "residual" in model:
+        model["meta"] = centroids.sparkSession.createDataFrame(
+            [(bool(model.pop("residual")),)], "residual boolean"
+        )
+    for name, df in {"centroids": centroids, **model}.items():
         _write_sidecar(df, path, name)
 
 
 def _append(
-    spark, path: str, new: DataFrame, id_col: str, vec_col: str,
-    table: str = "vectors", encode=None,
+    spark, path: str, new: DataFrame, id_col: str, vec_col: str
 ) -> list[int]:
     """Every tier's incremental add: assign ``new`` against the SAVED
-    centroids (no retrain), apply the tier's ``encode`` step, dedup by
-    id against the touched list partitions only, and append new files
-    to just those partitions. Returns the touched list ids."""
-    rows = assign_lists(
-        new, _read_sidecar(spark, path, "centroids"), vec_col=vec_col
-    )
-    if encode is not None:
-        rows = encode(rows)
+    centroids (no retrain), apply the tier's ``encode_lists`` (its
+    save_* builder's step) with the saved model, dedup by id against
+    the touched list partitions only, and append new files to just
+    those partitions. Returns the touched list ids."""
+    tier = _tier(spark, path)
+    cents = _read_centroids(spark, path)
+    rows = assign_lists(new, cents, vec_col=vec_col)
+    if tier != "flat":
+        from . import binary, pq, sq
+
+        encode = {"pq": pq, "sq8": sq, "binary": binary}[tier].encode_lists
+        rows = encode(rows, cents, id_col, vec_col, **_read_model(spark, path, tier))
     touched = sorted(
         r.list_id for r in rows.select("list_id").distinct().collect()
     )
     if not touched:
         return []
-    existing = _scan_lists(spark, path, touched, table)
+    existing = _scan_lists(spark, path, touched, tier)
     fresh = rows.join(existing.select(id_col), on=id_col, how="left_anti")
     fresh.write.mode("append").partitionBy("list_id").parquet(
-        f"{path}/{table}"
+        f"{path}/{_table(tier)}"
     )
     return touched
 
@@ -562,7 +605,7 @@ def ivf_search_persisted_batch_probed(
     scan prunes to the SAME probed lists: sharing the union keeps the
     whole mining call at ONE bounded centroid-probe job instead of
     re-running the crossJoin + window + collect a second time."""
-    cents = _read_sidecar(spark, path, "centroids")
+    cents = _read_centroids(spark, path)
     probes = (
         queries.select(query_id_col, query_vec_col)
         .crossJoin(F.broadcast(cents))

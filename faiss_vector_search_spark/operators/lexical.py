@@ -1640,7 +1640,7 @@ def lexical_index_append(
     """Incrementally add NEW documents (ids not already indexed — the
     add_documents contract) to a persisted inverted index: posting
     rows append as new files (existing files never rewritten, the
-    lifecycle.ivf_append posture), and ``_meta`` updates to the summed
+    lifecycle.append posture), and ``_meta`` updates to the summed
     globals so BM25's N/avgdl stay exact. The term dictionary appends
     the batch's distinct terms — terms the index already knows land as
     duplicate dictionary rows (append-only, never a rewrite), which

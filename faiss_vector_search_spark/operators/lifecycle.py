@@ -4,7 +4,7 @@ add-to-trained-index behavior (components/core/index_service.py:143-203
 ``add_vectors``: append vectors + train-if-needed + persist).
 
 The flat store already has :func:`index_store.add_vectors` (union +
-anti-join). These operators extend the same append semantics to the
+anti-join). :func:`append` extends the same append semantics to the
 PERSISTED, list-partitioned tiers (ivf.save_ivf / pq.save_ivfpq /
 sq.save_ivfsq / binary.save_ivfbin), where the point of the layout is
 that a write must not touch what a probe would not read. The layout
@@ -12,14 +12,15 @@ itself — the list-partitioned ``vectors``/``codes`` table plus the
 ``_centroids``, ``_codebooks`` (PQ), ``_bounds`` (SQ8), ``_meta`` (PQ
 residual flag) and ``_trained_on`` (train watermark) sidecars — is
 owned by :mod:`.ivf`; this module reads and writes it only through
-ivf's helpers, and every tier's append is ``ivf._append`` with the
-tier's encode step:
+ivf's helpers, and one append serves every tier (``ivf._append``
+reads the tier from the layout):
 
 - **append**: the new batch coarse-assigns against the SAVED centroids
-  (map-only, no retrain), encodes with the SAVED codebooks/bounds where
-  the tier compresses, id-dedups against ONLY the touched list
-  partitions, and lands as *appended files in just those partitions* —
-  untouched lists are never read, never rewritten. Append-mode file
+  (map-only, no retrain), runs the tier's ``encode_lists`` (the step
+  its save_* builder runs) with the SAVED codebooks/flag/bounds,
+  id-dedups against ONLY the touched list partitions, and lands as
+  *appended files in just those partitions* — untouched lists are
+  never read, never rewritten. Append-mode file
   adds beat a dynamic-partition overwrite here: no read-modify-write of
   existing rows (and no self-overwrite hazard of rewriting a path that
   is also the read source). Many small appended files are the normal
@@ -44,88 +45,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def ivf_append(
+def append(
     spark: SparkSession,
     path: str,
     new: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[int]:
-    """Incremental add into a persisted IVF-flat index (ivf.save_ivf
-    layout): assign with the saved centroids, append to the touched
-    list partitions. Returns the touched list ids."""
+    """Incremental add into a persisted IVF index of any tier (flat,
+    PQ, SQ8, binary — read from the layout at ``path``): assign with
+    the saved centroids, encode as the tier's builder does, append to
+    the touched list partitions. Returns the touched list ids."""
     from .ivf import _append
 
     return _append(spark, path, new, id_col, vec_col)
-
-
-def ivfpq_append(
-    spark: SparkSession,
-    path: str,
-    new: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[int]:
-    """Incremental add into a persisted IVF-PQ index (pq.save_ivfpq
-    layout): assign with the saved coarse centroids, PQ-encode with the
-    saved codebooks (codes quantize the raw vector, so the shared
-    codebooks stay valid for appended rows), append to touched lists."""
-    from .ivf import _append, _read_sidecar
-    from .pq import pq_encode
-
-    books = _read_sidecar(spark, path, "codebooks")
-    return _append(
-        spark, path, new, id_col, vec_col, table="codes",
-        encode=lambda rows: pq_encode(
-            rows, books, id_col=id_col, vec_col=vec_col,
-            keep_cols=("list_id",),
-        ),
-    )
-
-
-def ivfsq_append(
-    spark: SparkSession,
-    path: str,
-    new: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[int]:
-    """Incremental add into a persisted IVF-SQ8 index (sq.save_ivfsq
-    layout): assign with saved centroids, encode with the saved global
-    bounds, append to touched lists. A new component outside the
-    trained [min,max] clamps to the boundary code (sq._code_expr
-    floors/leasts) — drift past the bounds is a retrain trigger, not a
-    correctness break."""
-    from .ivf import _append, _read_sidecar
-    from .sq import sq_encode
-
-    bounds = _read_sidecar(spark, path, "bounds")
-    return _append(
-        spark, path, new, id_col, vec_col, table="codes",
-        encode=lambda rows: sq_encode(
-            rows, bounds, id_col=id_col, vec_col=vec_col,
-            keep_cols=("list_id",),
-        ),
-    )
-
-
-def ivfbin_append(
-    spark: SparkSession,
-    path: str,
-    new: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[int]:
-    """Incremental add into a persisted IVF-binary index
-    (binary.save_ivfbin layout): float-space assignment against the
-    saved centroids, sign-bit pack, append to touched lists."""
-    from .binary import binarize
-    from .ivf import _append
-
-    return _append(
-        spark, path, new, id_col, vec_col, table="codes",
-        encode=lambda rows: binarize(rows, vec_col=vec_col),
-    )
 
 
 def write_train_meta(
@@ -133,22 +66,28 @@ def write_train_meta(
 ) -> None:
     """Record the corpus size the current quantizer was trained on —
     the watermark :func:`should_retrain` compares against."""
-    from .ivf import _write_sidecar
+    from .ivf import _write_trained_on
 
-    _write_sidecar(
-        spark.createDataFrame([(int(trained_on),)], "trained_on bigint"),
-        path, "trained_on",
-    )
+    _write_trained_on(spark, path, trained_on)
+
+
+def _retrain_due(
+    ntotal: int, trained_on, growth_factor: float = 4.0,
+    min_train_points: int = 100,
+) -> bool:
+    """:func:`should_retrain`'s rule on counts the caller already has."""
+    if not trained_on:
+        return ntotal >= min_train_points
+    return ntotal >= growth_factor * trained_on
 
 
 def should_retrain(
     spark: SparkSession,
     path: str,
-    table: str = "vectors",
     growth_factor: float = 4.0,
     min_train_points: int = 100,
 ) -> bool:
-    """Drift guard for a persisted IVF-family index.
+    """Drift guard for a persisted IVF-family index of any tier.
 
     Reference behavior (index_service.py:179-185): an untrained IVF
     quantizer trains once ≥100 vectors arrive. The persisted-tier
@@ -157,13 +96,12 @@ def should_retrain(
     ``<path>/_trained_on``; absent watermark falls back to the
     reference's min-points rule). The count is a metadata-only scan of
     the partitioned table — no vector data is read."""
-    from .ivf import _scan_lists, _trained_on
+    from .ivf import _scan_lists, _tier, _trained_on
 
-    ntotal = _scan_lists(spark, path, table=table).count()
-    trained_on = _trained_on(spark, path)
-    if not trained_on:
-        return ntotal >= min_train_points
-    return ntotal >= growth_factor * trained_on
+    ntotal = _scan_lists(spark, path, tier=_tier(spark, path)).count()
+    return _retrain_due(
+        ntotal, _trained_on(spark, path), growth_factor, min_train_points
+    )
 
 
 def index_health_report(
@@ -201,14 +139,14 @@ def index_health_report(
       for list_id, so each grid step costs one pruned scan, never a
       re-assignment. ``recommended_nprobe`` = -1 if even a full scan
       misses the target (only possible under sampling noise).
-    - **retrain verdict**: :func:`should_retrain` against the
-      ``_trained_on`` watermark (growth_ratio = -1 when no watermark).
+    - **retrain verdict**: :func:`should_retrain`'s rule over the counts
+      above (growth_ratio = -1 when no ``_trained_on`` watermark).
 
     Rows-only by design (kmeans assignment + probe recall have no SQL
     twin); gated by tests/test_lifecycle.py properties instead.
     """
     from .ivf import _scan_lists, _trained_on, ivf_search_persisted_batch
-    from ..functions import vector as V
+    from .knn import topk_join
 
     vecs = _scan_lists(spark, path)
     sizes = {
@@ -224,24 +162,9 @@ def index_health_report(
         .select(F.col(id_col).alias("query_id"),
                 F.col(vec_col).alias("query_vec"))
     )
-    from pyspark.sql import Window
-
-    exact = (
-        vecs.crossJoin(F.broadcast(qdf))
-        .select(
-            "query_id", F.col(id_col),
-            V.ip_score(F.col(vec_col), F.col("query_vec")).alias("score"),
-        )
-        .withColumn(
-            "_r",
-            F.row_number().over(
-                Window.partitionBy("query_id")
-                .orderBy(F.col("score").desc(), F.col(id_col).asc())
-            ),
-        )
-        .where(F.col("_r") <= k)
-        .select("query_id", id_col)
-    )
+    # exact truth ranked like the probed search it grades (6-dp scores,
+    # id tie-break), so a full probe always reads recall 1.0
+    exact = topk_join(vecs, qdf, k=k, id_col=id_col, vec_col=vec_col)
     truth: dict = {}
     for r in exact.collect():
         truth.setdefault(r["query_id"], set()).add(r[id_col])
@@ -276,7 +199,7 @@ def index_health_report(
 
     trained_on = _trained_on(spark, path)
     growth = round(ntotal / trained_on, 4) if trained_on else -1.0
-    retrain = should_retrain(spark, path, growth_factor=growth_factor)
+    retrain = _retrain_due(ntotal, trained_on, growth_factor)
 
     rows = [
         ("n_vectors", float(ntotal)),
@@ -319,11 +242,20 @@ def retrain_ivf(
     (Spark cannot overwrite a path it is still reading); a production
     deployment would instead write a new snapshot version
     (maintenance.write_snapshot) and flip readers atomically."""
-    from .ivf import _read_sidecar, _scan_lists, kmeans_centroids, save_ivf
+    from .ivf import (
+        _read_centroids, _scan_lists, _tier, kmeans_centroids, save_ivf,
+    )
 
+    tier = _tier(spark, path)
+    if tier != "flat":
+        raise ValueError(
+            f"{path} is an IVF-{tier.upper()} index (codes only): rebuild "
+            "it from the source corpus with its save_* builder "
+            "(pq.save_ivfpq, sq.save_ivfsq, binary.save_ivfbin)"
+        )
     vecs = _scan_lists(spark, path).drop("list_id").localCheckpoint()
     if nlist is None:
-        nlist = _read_sidecar(spark, path, "centroids").count()
+        nlist = _read_centroids(spark, path).count()
     # engine/train_sample: the production retrain profile (arrow BLAS
     # Lloyd over a bounded id-strided sample) — the same knobs the
     # scale rehearsal forced on first-time training

@@ -464,6 +464,10 @@ def ivf_residual_frame(
     assigned = assign_lists(
         corpus, centroids, vec_col=vec_col, engine=assign_engine
     )
+    return _residuals(assigned, centroids, id_col, vec_col)
+
+
+def _residuals(assigned, centroids, id_col, vec_col) -> DataFrame:
     cents = centroids.select(
         F.col("cid").alias("list_id"), F.col("cvec").alias("_cvec")
     )
@@ -475,6 +479,20 @@ def ivf_residual_frame(
             F.col("_cvec"),
             lambda x, c: x - c,
         ).alias(vec_col),
+    )
+
+
+def encode_lists(
+    assigned, centroids, id_col, vec_col, codebooks, residual=False,
+    engine="sql",
+) -> DataFrame:
+    """IVF-PQ's list-encode step (:func:`save_ivfpq` and every append):
+    PQ codes of the raw vector, or of x − c_list when ``residual``."""
+    if residual:
+        assigned = _residuals(assigned, centroids, id_col, vec_col)
+    return pq_encode(
+        assigned, codebooks, id_col=id_col, vec_col=vec_col,
+        keep_cols=("list_id",), engine=engine,
     )
 
 
@@ -505,28 +523,19 @@ def save_ivfpq(
     default — finer codes on clustered data for the same bits;
     codebooks must then be TRAINED on :func:`ivf_residual_frame`, and
     search adds the per-list ⟨c, q⟩ offset back, which the persisted
-    ``_meta`` records so a later session reopens correctly).
+    flag records so a later session searches and appends correctly).
     """
     from .ivf import _write_lists, assign_lists
 
-    if residual:
-        assigned = ivf_residual_frame(
-            corpus, centroids, id_col=id_col, vec_col=vec_col,
-            assign_engine=assign_engine,
-        )
-    else:
-        assigned = assign_lists(
-            corpus, centroids, vec_col=vec_col, engine=assign_engine
-        )
-    codes = pq_encode(
-        assigned, codebooks, id_col=id_col, vec_col=vec_col,
-        keep_cols=("list_id",), engine=encode_engine,
+    assigned = assign_lists(
+        corpus, centroids, vec_col=vec_col, engine=assign_engine
     )
-    flag = corpus.sparkSession.createDataFrame(
-        [(bool(residual),)], "residual boolean"
+    codes = encode_lists(
+        assigned, centroids, id_col, vec_col, codebooks, residual,
+        engine=encode_engine,
     )
     _write_lists(
-        codes, centroids, path, "codes", codebooks=codebooks, meta=flag
+        codes, centroids, path, "pq", codebooks=codebooks, residual=residual
     )
 
 
@@ -545,14 +554,14 @@ def ivfpq_search_persisted(
     (nprobe/nlist) × (m bytes / 4·dim bytes) of a flat float scan —
     at nlist=16, nprobe=4, m=16 on 64-dim floats that is 1/64 of the
     bytes a flat search reads."""
-    from .ivf import _open_probed, _read_sidecar, _sidecar_value
+    from .ivf import _open_probed, _read_centroids, _read_model
 
     codes, probe_ids = _open_probed(
-        spark, path, query, nprobe, "codes", query_vec_col
+        spark, path, query, nprobe, "pq", query_vec_col
     )
-    books = _read_sidecar(spark, path, "codebooks")
-    # no flag (a pre-residual index layout) reads as raw codes
-    if not _sidecar_value(spark, path, "meta", "residual"):
+    model = _read_model(spark, path, "pq")
+    books = model["codebooks"]
+    if not model["residual"]:
         return pq_topk_adc(
             codes, books, query, k=k, id_col=id_col,
             query_vec_col=query_vec_col,
@@ -561,7 +570,7 @@ def ivfpq_search_persisted(
     # constants ride in as a broadcast (nprobe rows), the residual ADC
     # shares ONE query LUT across lists
     offs = (
-        _read_sidecar(spark, path, "centroids")
+        _read_centroids(spark, path)
         .where(F.col("cid").isin(probe_ids))
         .crossJoin(F.broadcast(query))
         .select(

@@ -237,11 +237,20 @@ def save_ivfsq(
     assigned = assign_lists(
         corpus, centroids, vec_col=vec_col, engine=assign_engine
     )
-    codes = sq_encode(
+    codes = encode_lists(assigned, centroids, id_col, vec_col, bounds)
+    _write_lists(codes, centroids, path, "sq8", bounds=bounds)
+
+
+def encode_lists(assigned, centroids, id_col, vec_col, bounds) -> DataFrame:
+    """IVF-SQ8's list-encode step (:func:`save_ivfsq` and every append;
+    the tiers' shared signature): raw-vector codes against the global
+    bounds, not the centroids. A component outside the trained
+    [min, max] clamps to the boundary code: drift past the bounds is a
+    retrain trigger, not a correctness break."""
+    return sq_encode(
         assigned, bounds, id_col=id_col, vec_col=vec_col,
         keep_cols=("list_id",),
     )
-    _write_lists(codes, centroids, path, "codes", bounds=bounds)
 
 
 def ivfsq_search_persisted(
@@ -258,10 +267,10 @@ def ivfsq_search_persisted(
     coarse centroids, prune the codes scan to those list partitions,
     decode-and-rank inside them. Scan cost = (nprobe/nlist) × 1/4 of
     a flat float scan's bytes. ``engine`` → :func:`sq_topk`."""
-    from .ivf import _open_probed, _read_sidecar
+    from .ivf import _open_probed, _read_model
 
-    codes, _ = _open_probed(spark, path, query, nprobe, "codes", query_vec_col)
+    codes, _ = _open_probed(spark, path, query, nprobe, "sq8", query_vec_col)
     return sq_topk(
-        codes, _read_sidecar(spark, path, "bounds"), query, k=k, id_col=id_col,
-        query_vec_col=query_vec_col, engine=engine,
+        codes, _read_model(spark, path, "sq8")["bounds"], query, k=k,
+        id_col=id_col, query_vec_col=query_vec_col, engine=engine,
     )

@@ -134,8 +134,9 @@ def incremental_index_add(
     Each micro-batch anti-joins against *current* indexed ids (a
     column-pruned parquet scan of just ``id_col``) and appends only
     fresh rows — append mode, never a rewrite of the existing index.
+    An index path that exists but cannot be read raises.
     """
-    from ..operators import index_store  # noqa: F401 (semantics source)
+    from ..io import path_exists
 
     new_vectors = (
         spark.readStream.schema(VECTOR_SCHEMA)
@@ -144,14 +145,10 @@ def incremental_index_add(
     )
 
     def add_batch(batch: DataFrame, batch_id: int) -> None:
-        try:
+        fresh = batch.dropDuplicates([id_col])
+        if path_exists(spark, index_path):
             existing_ids = spark.read.parquet(index_path).select(id_col)
-        except Exception:  # first batch: index does not exist yet
-            batch.dropDuplicates([id_col]).write.mode("append").parquet(index_path)
-            return
-        fresh = batch.dropDuplicates([id_col]).join(
-            existing_ids, on=id_col, how="left_anti"
-        )
+            fresh = fresh.join(existing_ids, on=id_col, how="left_anti")
         fresh.write.mode("append").parquet(index_path)
 
     writer = new_vectors.writeStream.foreachBatch(add_batch).trigger(

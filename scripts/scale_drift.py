@@ -10,7 +10,7 @@ replicas of the sf0.1 base):
    write_train_meta.
 2. DRIFT: append replica 9 (2k vectors — a rotation the quantizer
    never saw, i.e. a new domain arriving in ingest) through
-   lifecycle.ivf_append: map-only assignment against the SAVED
+   lifecycle.append: map-only assignment against the SAVED
    centroids, appended files in touched list partitions only.
 3. DECAY: recall_report(centroids=saved) with queries drawn from the
    NEW batch — the drift-monitoring deployment from the
@@ -124,7 +124,7 @@ def main() -> None:
     }), flush=True)
 
     t0 = time.time()
-    touched = lifecycle.ivf_append(spark, path, drift)
+    touched = lifecycle.append(spark, path, drift)
     grown = spark.read.parquet(f"{path}/vectors").drop("list_id")
     r_decay = ivf_recall(grown, saved_cents, drift_qids)
     trip = lifecycle.should_retrain(spark, path, growth_factor=1.05)

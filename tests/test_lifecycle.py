@@ -64,7 +64,7 @@ def test_ivf_append_touched_only_and_full_parity(
     ivf_mod.save_ivf(initial, cents, inc)
     before = _partition_files(f"{inc}/vectors")
 
-    touched = lifecycle.ivf_append(spark, inc, batch)
+    touched = lifecycle.append(spark, inc, batch)
     assert touched
     after = _partition_files(f"{inc}/vectors")
     for d, files in before.items():
@@ -83,9 +83,9 @@ def test_ivf_append_dedups_identical_readds(spark, emb, split, tmp_path):
     cents = ivf_mod.seeded_centroids(emb, 8)
     p = str(tmp_path / "dedup")
     ivf_mod.save_ivf(initial, cents, p)
-    lifecycle.ivf_append(spark, p, batch)
+    lifecycle.append(spark, p, batch)
     n1 = spark.read.parquet(f"{p}/vectors").count()
-    lifecycle.ivf_append(spark, p, batch)  # identical re-add
+    lifecycle.append(spark, p, batch)  # identical re-add
     assert spark.read.parquet(f"{p}/vectors").count() == n1 == emb.count()
 
 
@@ -96,7 +96,7 @@ def test_ivfpq_append_parity(spark, emb, split, tmp_path):
     inc, full = str(tmp_path / "inc"), str(tmp_path / "full")
     pq_mod.save_ivfpq(initial, cents, books, inc)
     before = _partition_files(f"{inc}/codes")
-    touched = lifecycle.ivfpq_append(spark, inc, batch)
+    touched = lifecycle.append(spark, inc, batch)
     after = _partition_files(f"{inc}/codes")
     for d, files in before.items():
         if int(d.split("=")[1]) not in touched:
@@ -115,7 +115,7 @@ def test_ivfsq_append_parity(spark, emb, split, tmp_path):
     bounds = sq_mod.sq_train(initial)
     inc, full = str(tmp_path / "inc"), str(tmp_path / "full")
     sq_mod.save_ivfsq(initial, cents, bounds, inc)
-    lifecycle.ivfsq_append(spark, inc, batch)
+    lifecycle.append(spark, inc, batch)
     sq_mod.save_ivfsq(emb, cents, bounds, full)
     q = _query(emb)
     got = sq_mod.ivfsq_search_persisted(spark, inc, q, nprobe=8).collect()
@@ -128,7 +128,7 @@ def test_ivfbin_append_parity(spark, emb, split, tmp_path):
     cents = ivf_mod.seeded_centroids(emb, 8)
     inc, full = str(tmp_path / "inc"), str(tmp_path / "full")
     binary_mod.save_ivfbin(initial, cents, inc)
-    lifecycle.ivfbin_append(spark, inc, batch)
+    lifecycle.append(spark, inc, batch)
     binary_mod.save_ivfbin(emb, cents, full)
     q = _query(emb)
     qcode = binary_mod.binarize(
@@ -151,7 +151,7 @@ def test_should_retrain_watermark(spark, emb, split, tmp_path):
     n0 = initial.count()
     lifecycle.write_train_meta(spark, p, n0)
     assert not lifecycle.should_retrain(spark, p)  # no growth yet
-    lifecycle.ivf_append(spark, p, batch)
+    lifecycle.append(spark, p, batch)
     # grown by ~1.5x: below the 4x default, above a 1.2x guard
     assert not lifecycle.should_retrain(spark, p, growth_factor=4.0)
     assert lifecycle.should_retrain(spark, p, growth_factor=1.2)
@@ -160,6 +160,16 @@ def test_should_retrain_watermark(spark, emb, split, tmp_path):
     ivf_mod.save_ivf(initial, cents, q)
     assert lifecycle.should_retrain(spark, q)  # ntotal >= 100, no meta
 
+
+
+def test_retrain_ivf_refuses_compressed_tier(spark, emb, tmp_path):
+    """A codes-only tier cannot retrain from itself: the error names the
+    tier and the builders instead of a missing-path failure."""
+    p = str(tmp_path / "sq")
+    cents = ivf_mod.seeded_centroids(emb, 8)
+    sq_mod.save_ivfsq(emb, cents, sq_mod.sq_train(emb), p)
+    with pytest.raises(ValueError, match="IVF-SQ8.*save_ivfsq"):
+        lifecycle.retrain_ivf(spark, p)
 
 def _recall_at_k(spark, path, emb, qid, nprobe, k=10):
     q = emb.where(F.col("vec_id") == qid).select(
@@ -188,7 +198,7 @@ def test_retrain_recovers_recall_after_drift(spark, emb, tmp_path):
     cents0 = ivf_mod.kmeans_centroids(initial, 8, iters=3)
     ivf_mod.save_ivf(initial, cents0, p)
     lifecycle.write_train_meta(spark, p, initial.count())
-    lifecycle.ivf_append(spark, p, drift)
+    lifecycle.append(spark, p, drift)
     assert lifecycle.should_retrain(spark, p, growth_factor=2.0)
 
     qid = drift.agg(F.max("vec_id")).first()[0]
@@ -203,11 +213,11 @@ def test_retrain_recovers_recall_after_drift(spark, emb, tmp_path):
 
 def test_recall_report_drives_the_retrain_story(spark, emb, tmp_path):
     """The full drift user story through the OPERATOR surface: build +
-    watermark -> ivf_append a shifted distribution -> recall_report
+    watermark -> lifecycle.append a shifted distribution -> recall_report
     (with the SAVED quantizer) shows the ivf tier degraded ->
     should_retrain trips -> retrain_ivf -> the same report shows the
     tier recovered and the guard re-arms. Wires evaluate.recall_report,
-    lifecycle.ivf_append and lifecycle.should_retrain/retrain_ivf into
+    lifecycle.append and lifecycle.should_retrain/retrain_ivf into
     one gate."""
     from faiss_vector_search_spark.operators import evaluate
 
@@ -219,7 +229,7 @@ def test_recall_report_drives_the_retrain_story(spark, emb, tmp_path):
     lifecycle.write_train_meta(spark, p, initial.count())
     assert not lifecycle.should_retrain(spark, p, growth_factor=2.0)
 
-    lifecycle.ivf_append(spark, p, drift)
+    lifecycle.append(spark, p, drift)
     assert lifecycle.should_retrain(spark, p, growth_factor=2.0)
 
     qids = tuple(

@@ -356,8 +356,40 @@ class TestResidualIVFPQ:
 
         before = search()
         # no watermark yet: the reference's 100-point rule decides
-        assert lifecycle.should_retrain(spark, path, table="codes")
+        assert lifecycle.should_retrain(spark, path)
         lifecycle.write_train_meta(spark, path, 1200)
         assert search() == before
         # 1200 rows against a 1200-row watermark: no retrain
-        assert not lifecycle.should_retrain(spark, path, table="codes")
+        assert not lifecycle.should_retrain(spark, path)
+
+    def test_residual_append_matches_rebuild(
+        self, spark, clustered, trained, tmp_path_factory
+    ):
+        """An append into a residual index encodes x − c_list exactly as
+        the build does: build on ids < 1100 + append ids 1100-1199
+        searches like a full residual rebuild, appended rows included."""
+        from faiss_vector_search_spark.operators import lifecycle
+
+        base = str(tmp_path_factory.mktemp("resivfpq5"))
+        books = pq.pq_train(
+            pq.ivf_residual_frame(clustered, trained), m=8, ksub=32, iters=4
+        )
+        pq.save_ivfpq(
+            clustered.where(F.col("vec_id") < 1100), trained, books,
+            f"{base}/inc", residual=True,
+        )
+        lifecycle.append(
+            spark, f"{base}/inc", clustered.where(F.col("vec_id") >= 1100)
+        )
+        pq.save_ivfpq(clustered, trained, books, f"{base}/full", residual=True)
+        for qid in (7, 1150):
+            q = clustered.where(F.col("vec_id") == qid).select(
+                F.col("embedding").alias("query_vec")
+            )
+            got, want = (
+                pq.ivfpq_search_persisted(
+                    spark, f"{base}/{name}", q, nprobe=16, k=10
+                ).collect()
+                for name in ("inc", "full")
+            )
+            assert got == want

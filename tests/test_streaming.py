@@ -4,9 +4,11 @@ add applies id-deduplicated appends across micro-batches."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from faiss_vector_search_spark import io as fio
@@ -67,6 +69,27 @@ def test_incremental_index_add_dedups_across_batches(spark, sf_small, tmp_path):
     assert final.select("vec_id").distinct().count() == 300
     assert final.agg(F.min("vec_id"), F.max("vec_id")).first() == (0, 299)
 
+
+
+def test_incremental_index_add_raises_on_unreadable_index(
+    spark, sf_small, tmp_path
+):
+    """An index directory that exists but does not read as parquet is
+    not a first batch: the stream fails instead of appending rows with
+    no id dedup."""
+    emb = fio.load_table(spark, sf_small, "embeddings")
+    src = tmp_path / "incoming"
+    emb.where("vec_id < 50").write.parquet(str(src))
+    idx = tmp_path / "index"
+    idx.mkdir()
+    (idx / "stray.txt").write_text("not parquet")
+
+    q = streams.incremental_index_add(
+        spark, str(src), str(idx), checkpoint=str(tmp_path / "ckpt")
+    )
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination()
+    assert sorted(os.listdir(idx)) == ["stray.txt"]
 
 def test_stateful_sessionize_matches_batch(spark, sf_small, tmp_path):
     """applyInPandasWithState sessionization over time-ordered
