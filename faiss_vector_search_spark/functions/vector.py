@@ -14,6 +14,7 @@ bit-comparable for the oracle gate.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -82,3 +83,36 @@ def l2_score(a: Column, b: Column) -> Column:
     """IndexFlatL2 similarity: 1/(1+d), d = squared L2
     (reference search_service.py:348-349)."""
     return 1.0 / (1.0 + l2_sq(a, b))
+
+
+# --- driver-side twins: the same folds over numpy rows, bit for bit ------
+# A serving path that already holds a query vector and a driver-sized
+# matrix (centroids, one query) computes these instead of a Spark job.
+# ``np.add.accumulate`` is a sequential left fold (no pairwise
+# summation), started from 0.0 like ``aggregate(..., 0.0, acc + x)``.
+
+
+def _fold_rows(terms):
+    t = np.asarray(terms, dtype=np.float64)
+    t = np.hstack([np.zeros((t.shape[0], 1)), t])
+    return np.add.accumulate(t, axis=1)[:, -1]
+
+
+def dot_rows(rows, q):
+    """:func:`dot` of every row of ``rows`` with ``q``."""
+    return _fold_rows(
+        np.asarray(rows, dtype=np.float64) * np.asarray(q, dtype=np.float64)
+    )
+
+
+def l2_sq_rows(rows, q):
+    """:func:`l2_sq` of every row of ``rows`` against ``q``."""
+    d = np.asarray(rows, dtype=np.float64) - np.asarray(q, dtype=np.float64)
+    return _fold_rows(d * d)
+
+
+def normalize_vec(v):
+    """:func:`normalize` of one vector."""
+    v = np.asarray(v, dtype=np.float64)
+    n = np.sqrt(dot_rows(v[None, :], v)[0])
+    return v if n == 0.0 else v / n

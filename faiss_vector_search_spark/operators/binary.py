@@ -138,9 +138,11 @@ def ivfbin_search_persisted(
     Hamming ranking runs on the 32×-smaller codes. Scan cost =
     (nprobe/nlist) × 1/32 of a flat float scan's bytes — the
     cheapest tier in the index ladder."""
-    from .ivf import _open_probed
+    from .ivf import _open_probed, _query_vector
 
-    codes, _ = _open_probed(spark, path, query, nprobe, "binary")
+    _, codes, _ = _open_probed(
+        spark, path, _query_vector(query), nprobe, "binary"
+    )
     return hamming_topk(codes, query_code, k=k, id_col=id_col)
 
 def binary_rerank_search(

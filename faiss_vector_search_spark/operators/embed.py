@@ -142,23 +142,33 @@ def _mlp_weights():
         return z["W1"], z["b1"], z["W2"]
 
 
-def md5_featurize(texts, dim: int):
-    """Worker-side hash featurization shared by every numpy model
-    slot: EXACTLY functions.hashing.md5_int(tok, seed=0) % dim — the
-    same bucket the JVM feature-hash embedder assigns, so a numpy
-    model's input features equal the declarative baseline's. Returns
-    the raw (len(texts), dim) count matrix (not normalized)."""
+def hash_featurize(texts, dim: int, hash_fn: str = "md5"):
+    """Python hash featurization shared by every numpy model slot and
+    the driver-side query embedding: EXACTLY
+    ``pmod(functions.hashing.hashed(tok, 0, hash_fn), dim)`` — the same
+    bucket the JVM feature-hash embedder assigns, so a numpy model's
+    input features equal the declarative baseline's. Returns the raw
+    (len(texts), dim) count matrix (not normalized)."""
     import hashlib
     import re
 
     import numpy as np
 
+    from ..functions.xxh import spark_xxhash64_str
+
+    if hash_fn == "md5":
+        def bucket(tok):
+            return int(hashlib.md5(("s0:" + tok).encode()).hexdigest()[:15], 16)
+    elif hash_fn == "xxhash64":
+        def bucket(tok):
+            return spark_xxhash64_str(tok, 0)
+    else:
+        raise ValueError(f"unknown hash_fn: {hash_fn}")
     tok_re = re.compile(r"[0-9a-z]+")
     x = np.zeros((len(texts), dim))
     for row, t in enumerate(texts):
         for tok in tok_re.findall((t or "").lower()):
-            h = hashlib.md5(("s0:" + tok).encode()).hexdigest()
-            x[row, int(h[:15], 16) % dim] += 1.0
+            x[row, bucket(tok) % dim] += 1.0
     return x
 
 
@@ -182,8 +192,21 @@ def query_embedding_numpy(query_text: str, dim: int = 64) -> list:
     instead of spending a 1-row mapInPandas stage (and its broadcast +
     crossJoin) per call."""
     return numpy_forward(
-        md5_featurize([query_text], dim), *_mlp_weights()
+        hash_featurize([query_text], dim), *_mlp_weights()
     )[0].tolist()
+
+
+def query_embedding_hash(
+    query_text: str, dim: int = 64, hash_fn: str = "md5"
+) -> list | None:
+    """One text through the feature-hash embedder ON THE DRIVER: bit
+    for bit the row :func:`embed_documents` (model="hash") gives it —
+    same buckets, same sequential normalize fold. None for a text with
+    no token, for which the JVM embedder emits no row."""
+    from ..functions.vector import normalize_vec
+
+    x = hash_featurize([query_text], dim, hash_fn)[0]
+    return normalize_vec(x).tolist() if x.any() else None
 
 
 def _embed_documents_numpy(
@@ -215,7 +238,7 @@ def _embed_documents_numpy(
             for lo in range(0, len(pdf), batch_size):
                 chunk = pdf.iloc[lo:lo + batch_size]
                 emb = numpy_forward(
-                    md5_featurize(chunk[text_col].tolist(), dim), *weights
+                    hash_featurize(chunk[text_col].tolist(), dim), *weights
                 )
                 out = {id_col: chunk[id_col].values, "embedding": list(emb)}
                 for c in keep_cols:
@@ -748,6 +771,16 @@ def chunk_search_persisted(
     pytest-gated). Chunk text rides the index rows, so the hit list
     needs no join back to the corpus.
 
+    Serving shape: the query is embedded on the driver
+    (:func:`query_embedding_hash`, bit-identical to the JVM embedder),
+    probed on the driver against the cached index handle
+    (``ivf._open``: tier, table schema, centroids, reloaded only when
+    ``<path>/_centroids`` is rewritten by a build or retrain) and
+    folded into the scan as a literal vector. A warm query therefore
+    runs ONE Spark job — the pruned scan with its top-k — and sees
+    appended chunks at once, since the table's files are listed per
+    query. A query with no token returns no row.
+
     Exactness contract (pytest-gated): with ``nprobe == nlist`` the
     result equals brute-force top-k over the same chunks; at any
     nprobe it is row-identical to the in-memory
@@ -755,35 +788,18 @@ def chunk_search_persisted(
     parameters.
     """
     from . import ivf as ivf_mod
-    from .knn import score_corpus
 
-    qdf = spark.createDataFrame([(0, query_text)], f"qid int, {text_col} string")
-    qv = embed_documents(
-        qdf, dim=dim, id_col="qid", text_col=text_col, hash_fn=hash_fn
-    ).select(F.col("embedding").alias("query_vec"))
-    index, _ = ivf_mod._open_probed(spark, path, qv, nprobe)
-    hits = (
-        score_corpus(index, qv)
-        .select(
-            F.col("_ckey"),
-            F.col("chunk"),
-            F.col("list_id").cast("int").alias("list_id"),
-            F.col("score"),
-        )
-        .orderBy(
-            F.col("score").desc(),
-            F.col("_ckey.d").asc(), F.col("_ckey.c").asc(),
-        )
-        .limit(k)
-    )
-    return hits.select(
+    qvec = query_embedding_hash(query_text, dim, hash_fn)
+    _, index, _ = ivf_mod._open_probed(spark, path, qvec, nprobe)
+    return index.select(
         F.col("_ckey.d").alias(id_col),
         F.col("_ckey.c").alias("chunk_id"),
         F.col("chunk").alias("chunk_text"),
-        F.col("list_id"),
-        F.col("score"),
-    ).orderBy(F.col("score").desc(), F.col(id_col).asc(),
-              F.col("chunk_id").asc())
+        F.col("list_id").cast("int").alias("list_id"),
+        ivf_mod._literal_score("ip", "embedding", qvec).alias("score"),
+    ).orderBy(
+        F.col("score").desc(), F.col(id_col).asc(), F.col("chunk_id").asc()
+    ).limit(k)
 
 
 def rag_context(

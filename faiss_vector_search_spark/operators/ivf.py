@@ -15,6 +15,19 @@ pruning — the Spark analogue of FAISS scanning only probed posting
 lists). This module owns that persisted layout for every tier (see
 "persisted layout" below).
 
+Serving: every persisted single-query search opens the index through
+a cached *index handle* (:func:`_open`, one per path): the tier, the
+table's schema, the centroids (as a frame and as driver rows), and
+the tier's saved model. It is checked on every open against the file
+names under ``<path>/_centroids`` (one Hadoop FS listing, no Spark
+job); a build, retrain or rebuild rewrites that sidecar under new
+names, so the next open reloads, while an append leaves it warm. The
+query vector is probed on the driver (the same (cdist, cid) order and
+sequential fold as :func:`probe_lists`) and scored as a literal, and
+the table is listed per query with the handle's schema — so a warm
+query runs one Spark job, the pruned scan with its top-k, and sees
+appended files at once. The batch search keeps its Spark-side probe.
+
 Determinism: centroids here are "seeded" = the first ``nlist`` corpus
 vectors by id (a valid random-sample quantizer; FAISS also samples
 training points). That keeps the whole operator expressible in ANSI
@@ -25,7 +38,10 @@ recall tests instead.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from typing import NamedTuple
+
+import numpy as np
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -323,21 +339,20 @@ def ivf_search(
         assigned["list_id"] == probes["probe_cid"],
         "leftsemi",
     )
-    return _topk_scored(candidates, query, k, metric, id_col, vec_col)
+    scored = score_corpus(candidates, query, metric=metric, vec_col=vec_col)
+    return _topk_scored(scored, F.col("score"), k, id_col)
 
 
 def _topk_scored(
-    rows: DataFrame, query: DataFrame, k: int, metric: str, id_col: str,
-    vec_col: str,
+    rows: DataFrame, score: Column, k: int, id_col: str
 ) -> DataFrame:
-    """(id, list_id, score) top-k of list-assigned rows against a
-    one-row query — the ranking every single-query IVF search shares."""
+    """(id, list_id, score) top-k of list-assigned rows — the ranking
+    every single-query IVF search shares."""
     return (
-        score_corpus(rows, query, metric=metric, vec_col=vec_col)
-        .select(
+        rows.select(
             F.col(id_col),
             F.col("list_id").cast("int").alias("list_id"),
-            F.col("score"),
+            score.alias("score"),
         )
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
         .limit(k)
@@ -367,6 +382,9 @@ def ivf_kmeans_search(
 # <path>/vectors (flat) or <path>/codes (PQ / SQ8 / binary), partitioned by
 # list_id, plus one-row-or-small parquet sidecars: _centroids, _codebooks
 # (PQ), _bounds (SQ8), _meta (PQ residual flag), _trained_on (watermark).
+# Readers go through a cached index handle (:func:`_open`): the sidecars
+# and the table schema are read once per build, the table's files are
+# listed fresh on every scan.
 
 
 def _table(tier: str) -> str:
@@ -404,10 +422,6 @@ def _sidecar_value(spark, path: str, name: str, field: str):
     return row[field] if row else None
 
 
-def _read_centroids(spark, path: str) -> DataFrame:
-    return _read_sidecar(spark, path, "centroids")
-
-
 def _read_model(spark, path: str, tier: str) -> dict:
     """The tier's saved ``encode_lists`` keyword arguments (no residual
     flag, a pre-residual PQ layout, reads as raw codes)."""
@@ -417,6 +431,61 @@ def _read_model(spark, path: str, tier: str) -> dict:
     if tier == "sq8":
         return {"bounds": _read_sidecar(spark, path, "bounds")}
     return {}
+
+
+class _Handle(NamedTuple):
+    """What a query needs of a persisted index besides its list files."""
+
+    spark: object            # the session the frames below belong to
+    path: str
+    stamp: tuple             # file names under <path>/_centroids
+    tier: str
+    schema: StructType       # the table's, so a scan infers nothing
+    centroids: DataFrame     # the _centroids sidecar
+    cids: list               # centroid ids, ascending
+    cvecs: np.ndarray        # one row per cid, in ``cids`` order
+    model: dict              # :func:`_read_model` of the tier
+
+
+_HANDLES: dict[str, _Handle] = {}
+
+
+def _centroid_stamp(spark, path: str) -> tuple:
+    """Names of the files under ``<path>/_centroids``: one Hadoop FS
+    listing, no Spark job. Every build, retrain or rebuild rewrites the
+    sidecar under new part-file names; appends never touch it."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/_centroids")
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
+        raise ValueError(f"no persisted IVF index at {path}")
+    return tuple(sorted(s.getPath().getName() for s in fs.listStatus(jpath)))
+
+
+def _open(spark, path: str, tier: str | None = None) -> _Handle:
+    """The index handle for ``path``, reloaded when the ``_centroids``
+    file names differ from the cached ones (or the session does). A
+    plain dict keyed by path: one entry per index a process opens."""
+    stamp = _centroid_stamp(spark, path)
+    h = _HANDLES.get(path)
+    if h is None or h.stamp != stamp or h.spark is not spark:
+        t = _tier(spark, path)
+        cents = _read_sidecar(spark, path, "centroids")
+        rows = sorted(cents.collect(), key=lambda r: r["cid"])
+        h = _HANDLES[path] = _Handle(
+            spark, path, stamp, t,
+            spark.read.parquet(f"{path}/{_table(t)}").schema, cents,
+            [r["cid"] for r in rows],
+            np.array([r["cvec"] for r in rows], dtype=np.float64),
+            _read_model(spark, path, t),
+        )
+    if tier is not None and h.tier != tier:
+        raise ValueError(
+            f"{path} is an IVF-{h.tier.upper()} index, not IVF-"
+            f"{tier.upper()}: rebuild it from the source corpus with the "
+            "tier's save_* builder (ivf.save_ivf, pq.save_ivfpq, "
+            "sq.save_ivfsq, binary.save_ivfbin)"
+        )
+    return h
 
 
 def _trained_on(spark, path: str):
@@ -436,31 +505,60 @@ def _index_exists(spark, path: str) -> bool:
     return path_exists(spark, f"{path}/_centroids")
 
 
-def _scan_lists(
-    spark, path: str, list_ids=None, tier: str = "flat"
-) -> DataFrame:
-    """The index table pruned to ``list_ids`` (every list when None):
-    the ``IN`` filter on the partition column reaches the parquet scan
-    as a partition filter, so other list directories are never read."""
-    rows = spark.read.parquet(f"{path}/{_table(tier)}")
+def _scan(h: _Handle, list_ids=None) -> DataFrame:
+    """The handle's table, listed now, pruned to ``list_ids`` (every
+    list when None): the ``IN`` filter on the partition column reaches
+    the parquet scan as a partition filter, so other list directories
+    are never read."""
+    rows = h.spark.read.schema(h.schema).parquet(f"{h.path}/{_table(h.tier)}")
     if list_ids is None:
         return rows
     return rows.where(F.col("list_id").isin(list_ids))
 
 
-def _open_probed(
-    spark, path: str, query: DataFrame, nprobe: int,
-    tier: str = "flat", query_vec_col: str = "query_vec",
-):
-    """Open a persisted index for one query: probe the saved centroids
-    (one bounded collect of ``nprobe`` ids) and return the table pruned
-    to those lists, with the probe ids."""
-    cents = _read_centroids(spark, path)
-    probe_ids = [
-        r.probe_cid
-        for r in probe_lists(query, cents, nprobe, query_vec_col).collect()
-    ]
-    return _scan_lists(spark, path, probe_ids, tier), probe_ids
+def _scan_lists(spark, path: str, list_ids=None) -> DataFrame:
+    return _scan(_open(spark, path), list_ids)
+
+
+def _query_vector(query: DataFrame, query_vec_col: str = "query_vec"):
+    """The vector of a one-row query frame, collected once; None when
+    the frame has no row (the search then probes no list)."""
+    rows = query.select(query_vec_col).collect()
+    if len(rows) > 1:
+        raise ValueError(
+            "a persisted single-query search takes one query row; use "
+            "ivf_search_persisted_batch for several"
+        )
+    return [float(x) for x in rows[0][0]] if rows else None
+
+
+def _literal_vec(values) -> Column:
+    """``values`` as an array<double> literal in the plan."""
+    return F.array(*[F.lit(float(x)) for x in values]).cast("array<double>")
+
+
+def _literal_score(metric: str, vec_col: str, qvec) -> Column:
+    """Rounded score of ``vec_col`` against a driver-side query vector
+    — :func:`knn.score_corpus`'s score with the query as a literal
+    instead of a broadcast cross join."""
+    return F.round(
+        _score_col(metric, F.col(vec_col), _literal_vec(qvec or [])),
+        SCORE_DECIMALS,
+    )
+
+
+def _open_probed(spark, path: str, qvec, nprobe: int, tier: str = "flat"):
+    """Open a persisted index for one driver-side query vector:
+    ``(handle, table pruned to the probed lists, probe ids)``. The probe
+    runs on the driver over the handle's centroids and returns the ids
+    :func:`probe_lists` would ((cdist, cid) order, the same sequential
+    fold); a None vector probes no list."""
+    h = _open(spark, path, tier)
+    probe_ids = []
+    if qvec is not None and h.cids:
+        d = V.l2_sq_rows(h.cvecs, qvec).tolist()
+        probe_ids = [c for _, c in sorted(zip(d, h.cids))[:nprobe]]
+    return h, _scan(h, probe_ids), probe_ids
 
 
 def _write_lists(
@@ -488,24 +586,25 @@ def _append(
     save_* builder's step) with the saved model, dedup by id against
     the touched list partitions only, and append new files to just
     those partitions. Returns the touched list ids."""
-    tier = _tier(spark, path)
-    cents = _read_centroids(spark, path)
-    rows = assign_lists(new, cents, vec_col=vec_col)
-    if tier != "flat":
+    h = _open(spark, path)
+    rows = assign_lists(new, h.centroids, vec_col=vec_col)
+    if h.tier != "flat":
         from . import binary, pq, sq
 
-        encode = {"pq": pq, "sq8": sq, "binary": binary}[tier].encode_lists
-        rows = encode(rows, cents, id_col, vec_col, **_read_model(spark, path, tier))
+        encode = {"pq": pq, "sq8": sq, "binary": binary}[h.tier].encode_lists
+        rows = encode(rows, h.centroids, id_col, vec_col, **h.model)
+    # the batch plan (e.g. chunk + embed + assign) runs once, with the
+    # partitioning adaptive execution gives it (a cached plan keeps
+    # the shuffle's, which wrote up to 1.5x the files per append)
+    rows = rows.localCheckpoint()
     touched = sorted(
         r.list_id for r in rows.select("list_id").distinct().collect()
     )
-    if not touched:
-        return []
-    existing = _scan_lists(spark, path, touched, tier)
-    fresh = rows.join(existing.select(id_col), on=id_col, how="left_anti")
-    fresh.write.mode("append").partitionBy("list_id").parquet(
-        f"{path}/{_table(tier)}"
-    )
+    if touched:
+        existing = _scan(h, touched).select(id_col)
+        rows.join(existing, on=id_col, how="left_anti").write.mode(
+            "append"
+        ).partitionBy("list_id").parquet(f"{path}/{_table(h.tier)}")
     return touched
 
 
@@ -544,9 +643,16 @@ def ivf_search_persisted(
     by tests/test_index_store.py) instead of re-assigning the corpus.
     This is the plan FAISS's scan-only-probed-posting-lists becomes on
     a cluster: scan fraction = nprobe/nlist of the files, zero
-    compute on unprobed lists."""
-    index, _ = _open_probed(spark, path, query, nprobe)
-    return _topk_scored(index, query, k, metric, id_col, vec_col)
+    compute on unprobed lists.
+
+    The query row is collected once, probed on the driver and scored as
+    a literal, so a warm call runs one Spark job (two when collecting
+    ``query`` runs one): the pruned scan with its top-k."""
+    qvec = _query_vector(query)
+    _, index, _ = _open_probed(spark, path, qvec, nprobe)
+    return _topk_scored(
+        index, _literal_score(metric, vec_col, qvec), k, id_col
+    )
 
 
 def ivf_search_persisted_batch(
@@ -605,7 +711,7 @@ def ivf_search_persisted_batch_probed(
     scan prunes to the SAME probed lists: sharing the union keeps the
     whole mining call at ONE bounded centroid-probe job instead of
     re-running the crossJoin + window + collect a second time."""
-    cents = _read_centroids(spark, path)
+    cents = _open(spark, path).centroids
     probes = (
         queries.select(query_id_col, query_vec_col)
         .crossJoin(F.broadcast(cents))

@@ -96,9 +96,9 @@ def should_retrain(
     ``<path>/_trained_on``; absent watermark falls back to the
     reference's min-points rule). The count is a metadata-only scan of
     the partitioned table — no vector data is read."""
-    from .ivf import _scan_lists, _tier, _trained_on
+    from .ivf import _scan_lists, _trained_on
 
-    ntotal = _scan_lists(spark, path, tier=_tier(spark, path)).count()
+    ntotal = _scan_lists(spark, path).count()
     return _retrain_due(
         ntotal, _trained_on(spark, path), growth_factor, min_train_points
     )
@@ -143,11 +143,13 @@ def index_health_report(
       above (growth_ratio = -1 when no ``_trained_on`` watermark).
 
     Rows-only by design (kmeans assignment + probe recall have no SQL
-    twin); gated by tests/test_lifecycle.py properties instead.
+    twin); gated by tests/test_lifecycle.py properties instead. A
+    PQ/SQ8/binary index raises a ValueError naming its tier.
     """
-    from .ivf import _scan_lists, _trained_on, ivf_search_persisted_batch
+    from .ivf import _open, _scan_lists, _trained_on, ivf_search_persisted_batch
     from .knn import topk_join
 
+    _open(spark, path, "flat")
     vecs = _scan_lists(spark, path)
     sizes = {
         r["list_id"]: r["n"]
@@ -242,20 +244,12 @@ def retrain_ivf(
     (Spark cannot overwrite a path it is still reading); a production
     deployment would instead write a new snapshot version
     (maintenance.write_snapshot) and flip readers atomically."""
-    from .ivf import (
-        _read_centroids, _scan_lists, _tier, kmeans_centroids, save_ivf,
-    )
+    from .ivf import _open, _scan_lists, kmeans_centroids, save_ivf
 
-    tier = _tier(spark, path)
-    if tier != "flat":
-        raise ValueError(
-            f"{path} is an IVF-{tier.upper()} index (codes only): rebuild "
-            "it from the source corpus with its save_* builder "
-            "(pq.save_ivfpq, sq.save_ivfsq, binary.save_ivfbin)"
-        )
+    cids = _open(spark, path, "flat").cids
     vecs = _scan_lists(spark, path).drop("list_id").localCheckpoint()
     if nlist is None:
-        nlist = _read_centroids(spark, path).count()
+        nlist = len(cids)
     # engine/train_sample: the production retrain profile (arrow BLAS
     # Lloyd over a bounded id-strided sample) — the same knobs the
     # scale rehearsal forced on first-time training

@@ -554,33 +554,29 @@ def ivfpq_search_persisted(
     (nprobe/nlist) × (m bytes / 4·dim bytes) of a flat float scan —
     at nlist=16, nprobe=4, m=16 on 64-dim floats that is 1/64 of the
     bytes a flat search reads."""
-    from .ivf import _open_probed, _read_centroids, _read_model
+    from .ivf import _literal_vec, _open_probed, _query_vector
 
-    codes, probe_ids = _open_probed(
-        spark, path, query, nprobe, "pq", query_vec_col
-    )
-    model = _read_model(spark, path, "pq")
-    books = model["codebooks"]
-    if not model["residual"]:
+    qvec = _query_vector(query, query_vec_col)
+    h, codes, probe_ids = _open_probed(spark, path, qvec, nprobe, "pq")
+    books = h.model["codebooks"]
+    if not h.model["residual"]:
         return pq_topk_adc(
             codes, books, query, k=k, id_col=id_col,
             query_vec_col=query_vec_col,
         )
     # residual codes: x·q = ⟨c_list, q⟩ + ⟨r, q⟩ — the probed lists'
-    # constants ride in as a broadcast (nprobe rows), the residual ADC
-    # shares ONE query LUT across lists
-    offs = (
-        _read_centroids(spark, path)
-        .where(F.col("cid").isin(probe_ids))
-        .crossJoin(F.broadcast(query))
-        .select(
-            F.col("cid").alias("list_id"),
-            V.dot(F.col("cvec"), F.col(query_vec_col)).alias("_off"),
-        )
+    # constants (V.dot's fold, on the driver over the handle's
+    # centroids) ride in as a literal map, the residual ADC shares ONE
+    # query LUT across lists
+    rows = [h.cids.index(c) for c in probe_ids]
+    offs = V.dot_rows(h.cvecs[rows], qvec) if rows else []
+    off_map = F.map_from_arrays(
+        F.array(*[F.lit(c) for c in probe_ids]).cast("array<int>"),
+        _literal_vec(offs),
     )
     return pq_topk_adc(
-        codes.join(F.broadcast(offs), "list_id"), books, query, k=k,
-        id_col=id_col, query_vec_col=query_vec_col, offset_col="_off",
+        codes.withColumn("_off", off_map[F.col("list_id")]), books, query,
+        k=k, id_col=id_col, query_vec_col=query_vec_col, offset_col="_off",
     )
 
 

@@ -156,13 +156,13 @@ def cross_encoder_rerank(
     def score_batches(batches):
         import pandas as pd
 
-        q = embed_mod.md5_featurize([query_text], dim)[0]
+        q = embed_mod.hash_featurize([query_text], dim)[0]
         qn = np.linalg.norm(q)
         qu = q / qn if qn > 0 else q
         for pdf in batches:
             for lo in range(0, len(pdf), batch_size):
                 chunk = pdf.iloc[lo:lo + batch_size]
-                x = embed_mod.md5_featurize(chunk[text_col].tolist(), dim)
+                x = embed_mod.hash_featurize(chunk[text_col].tolist(), dim)
                 xn = np.linalg.norm(x, axis=1, keepdims=True)
                 u = np.divide(x, xn, out=np.zeros_like(x), where=xn > 0)
                 pair = np.concatenate(

@@ -267,10 +267,12 @@ def ivfsq_search_persisted(
     coarse centroids, prune the codes scan to those list partitions,
     decode-and-rank inside them. Scan cost = (nprobe/nlist) × 1/4 of
     a flat float scan's bytes. ``engine`` → :func:`sq_topk`."""
-    from .ivf import _open_probed, _read_model
+    from .ivf import _open_probed, _query_vector
 
-    codes, _ = _open_probed(spark, path, query, nprobe, "sq8", query_vec_col)
+    h, codes, _ = _open_probed(
+        spark, path, _query_vector(query, query_vec_col), nprobe, "sq8"
+    )
     return sq_topk(
-        codes, _read_model(spark, path, "sq8")["bounds"], query, k=k,
+        codes, h.model["bounds"], query, k=k,
         id_col=id_col, query_vec_col=query_vec_col, engine=engine,
     )

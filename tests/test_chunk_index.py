@@ -125,3 +125,40 @@ def test_retrain_guard_composes_with_chunk_index(spark, docs, tmp_path):
         spark, path, docs.where(F.col("doc_id") >= 40)
     )
     assert lifecycle.should_retrain(spark, path, growth_factor=4.0) is True
+
+
+PARITY_TEXTS = [
+    "",
+    "!!! ... ??? --- ;;",
+    "spark spark spark 42 42 7 spark 007 x1y2 x1y2",
+    # İ and the Kelvin sign (U+212A) lowercase to ASCII i and k
+    "İstanbul ıi KELVIN \u212aelvin 5\u212a naïve Straße 数据 çà ÉCOLE",
+    " ".join(f"word{i % 37} Token{i % 11} 9{i}" for i in range(200))[:2048],
+]
+
+
+@pytest.mark.parametrize("hash_fn", ["md5", "xxhash64"])
+def test_driver_query_embedding_matches_jvm_embedder(spark, hash_fn):
+    """The driver-side query vector chunk_search_persisted folds into
+    its scan equals embed_documents' row bit for bit; a text with no
+    token has no row in either."""
+    assert len(PARITY_TEXTS[-1]) == 2048
+    df = spark.createDataFrame(
+        list(enumerate(PARITY_TEXTS)), "doc_id bigint, text string"
+    )
+    jvm = {
+        r.doc_id: list(r.embedding)
+        for r in embed.embed_documents(df, hash_fn=hash_fn).collect()
+    }
+    for i, text in enumerate(PARITY_TEXTS):
+        assert embed.query_embedding_hash(text, 64, hash_fn) == jvm.get(i), i
+    assert 0 not in jvm and 1 not in jvm
+
+
+def test_no_token_query_returns_no_rows(spark, docs, tmp_path):
+    path = str(tmp_path / "idx")
+    embed.chunk_index_build(docs, path, nlist=8)
+    for text in ("", "!!! ... ???"):
+        assert embed.chunk_search_persisted(
+            spark, path, text, k=5, nprobe=8
+        ).collect() == []

@@ -109,3 +109,90 @@ def test_cosine_full_probe_equals_exact_topk(emb, query, cents):
     assert [(r.vec_id, r.score) for r in got.collect()] == [
         (r.vec_id, r.score) for r in want.collect()
     ]
+
+
+# --- the cached index handle (ivf._open) --------------------------------
+
+
+def _jobs(spark, run) -> int:
+    """Spark jobs one call of ``run`` starts (StatusTracker job group)."""
+    sc = spark.sparkContext
+    group = f"ivf-layout-{id(run)}"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(df):
+    return [tuple(r) for r in df.collect()]
+
+
+def test_handle_reloads_after_rebuild(spark, sf_small, tmp_path):
+    """A rebuild of the same path with other centroids (another corpus
+    and nlist) is served at once: the next query equals the in-memory
+    engine over the new build, not the cached handle's old centroids."""
+    docs = fio.load_table(spark, sf_small, "documents")
+    path = str(tmp_path / "chunks")
+    for corpus, nlist in ((docs, 8), (docs.where(F.col("doc_id") % 2 == 1), 4)):
+        embed.chunk_index_build(corpus, path, nlist=nlist)
+        assert _rows(embed.chunk_search_persisted(
+            spark, path, QUERY_TEXT, k=5, nprobe=NPROBE
+        )) == _rows(embed.chunk_text_search_ivf(
+            corpus, QUERY_TEXT, k=5, nlist=nlist, nprobe=NPROBE
+        ))
+
+
+def test_handle_serves_appended_chunks(spark, sf_small, tmp_path):
+    """Appends leave the handle warm and are served by the next query:
+    an appended chunk's own text finds it at score 1.0 with one probe."""
+    docs = fio.load_table(spark, sf_small, "documents")
+    path = str(tmp_path / "chunks")
+    embed.chunk_index_build(docs, path, nlist=NLIST)
+    embed.chunk_search_persisted(spark, path, QUERY_TEXT, nprobe=1).collect()
+    new_id = 10**9
+    text = ("zebra quokka axolotl narwhal okapi pangolin tapir "
+            "capybara wombat ibex")
+    embed.chunk_index_append(spark, path, spark.createDataFrame(
+        [(new_id, text)], "doc_id bigint, text string"
+    ))
+    chunk = (
+        spark.read.parquet(f"{path}/vectors")
+        .where(F.col("_ckey.d") == new_id).first()["chunk"]
+    )
+    hits = embed.chunk_search_persisted(
+        spark, path, chunk, k=3, nprobe=1
+    ).collect()
+    assert (hits[0].doc_id, hits[0].score) == (new_id, 1.0)
+
+
+def test_warm_persisted_queries_run_one_job(
+    spark, sf_small, emb, cents, tmp_path
+):
+    """A warm chunk query is one Spark job (the pruned scan with its
+    top-k); a flat query whose vector comes from createDataFrame adds
+    at most the job that collects it."""
+    docs = fio.load_table(spark, sf_small, "documents")
+    chunks = str(tmp_path / "chunks")
+    embed.chunk_index_build(docs, chunks, nlist=NLIST)
+
+    def chunk_query():
+        embed.chunk_search_persisted(
+            spark, chunks, QUERY_TEXT, k=5, nprobe=NPROBE
+        ).collect()
+
+    chunk_query()
+    assert _jobs(spark, chunk_query) == 1
+
+    flat = str(tmp_path / "flat")
+    ivf.save_ivf(emb, cents, flat)
+    qvec = emb.where(F.col("vec_id") == 3).first()["embedding"]
+    query = spark.createDataFrame([(qvec,)], "query_vec array<double>")
+
+    def flat_query():
+        ivf.ivf_search_persisted(spark, flat, query, nprobe=NPROBE).collect()
+
+    flat_query()
+    assert _jobs(spark, flat_query) <= 2

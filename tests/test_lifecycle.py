@@ -333,3 +333,14 @@ class TestIndexHealthReport:
         assert rep["growth_ratio"] == -1.0
         # reference min-points rule: >=100 vectors with no watermark
         assert rep["should_retrain"] == 1.0
+
+
+def test_health_report_refuses_compressed_tier(spark, emb, tmp_path):
+    """The health report grades the flat tier's stored vectors: on a
+    codes-only index it names the tier and the builders, like
+    retrain_ivf, instead of failing on a missing ``vectors`` path."""
+    p = str(tmp_path / "sq")
+    cents = ivf_mod.seeded_centroids(emb, 8)
+    sq_mod.save_ivfsq(emb, cents, sq_mod.sq_train(emb), p)
+    with pytest.raises(ValueError, match="IVF-SQ8.*save_ivfsq"):
+        lifecycle.index_health_report(spark, p, query_ids=(0,), k=3)
