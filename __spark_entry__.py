@@ -5736,7 +5736,7 @@ def q_ivf_batch_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe map broadcast-joined so rows score only against the queries
     that probed their list). Hash-gated on the composed multi-query
     semantics (seeded centroids, per-query probes, per-query rank);
-    equality with the per-query ivf_search_persisted loop + the prune
+    equality with the per-query ivf.search_persisted loop + the prune
     plan fact are additionally pytest-gated (tests/test_wave4_ops.py)."""
     import tempfile
 

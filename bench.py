@@ -207,7 +207,7 @@ def build_headline(cpus: str = "32") -> dict:
         q = emb.where(F.col("vec_id") == 2).select(
             F.col("embedding").alias("query_vec")
         )
-        return ivf_mod.ivf_search_persisted(
+        return ivf_mod.search_persisted(
             spark, _ivf_paths[sf], q, nprobe=4, k=10
         )
 
@@ -286,7 +286,7 @@ def build_headline(cpus: str = "32") -> dict:
         q = emb.where(F.col("vec_id") == 2).select(
             F.col("embedding").alias("query_vec")
         )
-        return pq_mod.ivfpq_search_persisted(
+        return ivf_mod.search_persisted(
             spark, _ivfpq_paths[sf], q, nprobe=4, k=10
         )
 
@@ -319,7 +319,7 @@ def build_headline(cpus: str = "32") -> dict:
         q = emb.where(F.col("vec_id") == 2).select(
             F.col("embedding").alias("query_vec")
         )
-        return pq_mod.ivfpq_search_persisted(
+        return ivf_mod.search_persisted(
             spark, _ivfpq_res_paths[sf], q, nprobe=4, k=10
         )
 
@@ -344,7 +344,7 @@ def build_headline(cpus: str = "32") -> dict:
         q = emb.where(F.col("vec_id") == 2).select(
             F.col("embedding").alias("query_vec")
         )
-        return sq_mod.ivfsq_search_persisted(
+        return ivf_mod.search_persisted(
             spark, _ivfsq_paths[sf], q, nprobe=4, k=10
         )
 
@@ -404,7 +404,7 @@ def build_headline(cpus: str = "32") -> dict:
         # Arrow-transfer overhead without a win (measured r5: 0.52 s
         # arrow vs 0.34-0.49 s sql at sf0.1); the arrow engine's 7.1x
         # applies to CACHED codes at sf10 (r4 note) and the persisted
-        # IVF-SQ8 tier passes engine= through for that regime.
+        # sq_topk(engine="arrow") is the path for that regime.
         "sq_search": qs["sq_search"],
         "dedup_exact": qs["dedup_exact"],
         "dedup_minhash_lsh": p_minhash,

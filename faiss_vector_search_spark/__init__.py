@@ -14,6 +14,8 @@ Operator modules (``faiss_vector_search_spark.operators.*``):
 
 - ``knn``         flat IP/L2 top-k, thresholds, dynamic search, batch
 - ``ivf``         IVF indexes: seeded / k-means quantizers, persisted
+                  layout, one ``search_persisted`` for every saved
+                  float tier (flat / PQ / SQ8)
 - ``lsh``         hyperplane LSH: ANN search + embedding near-dup
 - ``dedup``       exact / keep-best / Jaccard / MinHash / SimHash /
                   cosine near-dup + connected-component clusters
@@ -32,10 +34,13 @@ Operator modules (``faiss_vector_search_spark.operators.*``):
 - ``lifecycle``   one ``append`` for every persisted IVF tier, retrain
                   guard, index health report
 - ``pq``          product quantization: train / encode / ADC search /
-                  rerank / persisted IVF-PQ
+                  rerank / IVF-PQ build (its ADC score serves
+                  ``ivf.search_persisted``)
 - ``sq``          SQ8 scalar quantization: bounds train / encode /
-                  decode-on-scan search
-- ``binary``      binary (Hamming) codes: sign-bit pack + flat search
+                  decode-on-scan search / IVF-SQ8 build (its decode
+                  score serves ``ivf.search_persisted``)
+- ``binary``      binary (Hamming) codes: sign-bit pack + flat search,
+                  persisted IVF-binary search
 - ``transform``   PCA dim reduction (one-pass Gram train, codegen
                   projection)
 - ``rerank``      MMR diversity rerank over retrieval shortlists

@@ -116,3 +116,22 @@ def normalize_vec(v):
     v = np.asarray(v, dtype=np.float64)
     n = np.sqrt(dot_rows(v[None, :], v)[0])
     return v if n == 0.0 else v / n
+
+
+def _sql_literal(v) -> str:
+    if isinstance(v, (list, tuple, np.ndarray)):
+        return "array(" + ", ".join(map(_sql_literal, v)) + ")"
+    if isinstance(v, (int, np.integer)):
+        return str(int(v))
+    x = float(v)
+    # repr is the shortest text that parses back to the same double
+    return f"{x!r}D" if np.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
+
+
+def literal(values) -> Column:
+    """Driver-side values (a vector, nested lists, ints) as one array
+    literal, made by ONE py4j call: the SQL text is parsed in the JVM,
+    floats as DOUBLE (bit for bit), ints as INT/BIGINT. One ``F.lit``
+    per component would cost a round trip each, and another when py4j
+    releases it."""
+    return F.expr(_sql_literal(values))

@@ -20,8 +20,14 @@ where the float scan reads 256.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions import vector as V
+from .knn import query_vector
+
 
 def _zero():
     # built lazily: F.lit needs an active session in classic mode
@@ -78,17 +84,33 @@ def hamming_topk(
     """Flat binary search: k nearest by Hamming distance (ascending,
     id tie-break). ``query`` is one row carrying the packed code."""
     q = F.broadcast(query.select(F.col(query_code_col)))
+    return _rank_hamming(
+        codes.crossJoin(q), F.col(query_code_col), k, id_col, code_col
+    )
+
+
+def _rank_hamming(codes: DataFrame, qcode, k, id_col, code_col="code"):
     return (
-        codes.crossJoin(q)
-        .select(
+        codes.select(
             id_col,
-            hamming_distance(F.col(code_col), F.col(query_code_col)).alias(
-                "hamming"
-            ),
+            hamming_distance(F.col(code_col), qcode).alias("hamming"),
         )
         .orderBy(F.col("hamming").asc(), F.col(id_col).asc())
         .limit(k)
     )
+
+
+def sign_code(vec) -> list[int]:
+    """:func:`binarize`'s code of one driver-side vector: bit = the
+    component is > 0 (Spark orders NaN above every number), 32 bits a
+    word, MSB-first; a short last word packs only its components."""
+    words = []
+    for w in range(0, len(vec), 32):
+        acc = 0
+        for x in vec[w : w + 32]:
+            acc = acc * 2 + (1 if x > 0.0 or math.isnan(x) else 0)
+        words.append(acc)
+    return words
 
 
 def save_ivfbin(
@@ -128,22 +150,26 @@ def ivfbin_search_persisted(
     spark,
     path: str,
     query: DataFrame,
-    query_code: DataFrame,
     nprobe: int = 4,
     k: int = 10,
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Search a persisted IVF-binary index: float query probes the
+    """Search a persisted IVF-binary index (FAISS ``IndexBinaryIVF``,
+    whose search is its own API, as here): the float query probes the
     coarse centroids, the codes scan prunes to those partitions, and
-    Hamming ranking runs on the 32×-smaller codes. Scan cost =
-    (nprobe/nlist) × 1/32 of a flat float scan's bytes — the
-    cheapest tier in the index ladder."""
-    from .ivf import _open_probed, _query_vector
+    Hamming ranking runs on the 32×-smaller codes — ``(id, hamming)``,
+    ascending. The query row is collected once; its sign code is packed
+    on the driver (:func:`sign_code`) from the same vector the probe
+    uses and rides the scan as a literal, so a warm call runs the
+    collect and one pruned scan. Scan cost = (nprobe/nlist) × 1/32 of a
+    flat float scan's bytes — the cheapest tier in the index ladder."""
+    from .ivf import _open_probed
 
-    _, codes, _ = _open_probed(
-        spark, path, _query_vector(query), nprobe, "binary"
-    )
-    return hamming_topk(codes, query_code, k=k, id_col=id_col)
+    qvec = query_vector(query)
+    _, codes, _ = _open_probed(spark, path, qvec, nprobe, "binary")
+    qcode = V.literal(sign_code(qvec or [])).cast("array<bigint>")
+    return _rank_hamming(codes, qcode, k, id_col)
+
 
 def binary_rerank_search(
     corpus: DataFrame,

@@ -57,7 +57,7 @@ def recall_report(
     ladder — pq_adc (compressed-domain ranking), pq_rerank (ADC
     shortlist + exact rescore), ivfpq (probe-pruned ADC: the codes
     filtered to the nprobe probed lists before ranking — the exact
-    candidate set ivfpq_search_persisted reads via partition pruning,
+    candidate set ivf.search_persisted reads via partition pruning,
     so its recall measures the persisted tier without a write) — and
     the LSH pair: lsh (home buckets only) vs lsh_multiprobe (same
     index, +``lsh_multiprobe`` bit-flip probes per table), so the
@@ -136,18 +136,7 @@ def recall_report(
         # residual distribution — the FAISS IndexIVFPQ default, worth
         # its own rung because its value tracks quantizer quality
         # (BENCH_BASELINE: +0.19 ADC at 256 bits trained, HALVED seeded)
-        cents_r = cents.select(
-            F.col("cid").alias("list_id"), F.col("cvec").alias("_cvec")
-        )
-        resid = assigned.join(F.broadcast(cents_r), "list_id").select(
-            F.col(id_col),
-            F.col("list_id"),
-            F.zip_with(
-                F.col(vec_col).cast("array<double>"),
-                F.col("_cvec"),
-                lambda x, c: x - c,
-            ).alias(vec_col),
-        )
+        resid = pq_mod._residuals(assigned, cents, id_col, vec_col)
         res_books = pq_mod.pq_train(
             resid, m=pq_m, ksub=pq_ksub, iters=pq_iters,
             id_col=id_col, vec_col=vec_col,
@@ -157,6 +146,12 @@ def recall_report(
         res_codes = pq_mod.pq_encode(
             resid, res_books, id_col=id_col, vec_col=vec_col,
             keep_cols=("list_id",), engine=engine,
+        )
+        res_lut = pq_mod.collect_codebooks(res_books)
+        cent_rows = cents.orderBy("cid").collect()
+        res_lists = (
+            [r["cid"] for r in cent_rows],
+            [[float(x) for x in r["cvec"]] for r in cent_rows],
         )
 
     opq_model = opq_books = opq_codes = None
@@ -230,37 +225,19 @@ def recall_report(
             ), qid, id_col)
         )
         if include_residual:
-            probes = ivf_mod.probe_lists(q, cents, nprobe)
             probed_res = res_codes.join(
-                F.broadcast(probes),
+                F.broadcast(ivf_mod.probe_lists(q, cents, nprobe)),
                 res_codes["list_id"] == F.col("probe_cid"),
                 "leftsemi",
             )
-            # x·q = <c_list, q> + <r, q>: the probed lists' constants
-            # broadcast (nprobe rows), one shared LUT across lists
-            offs = (
-                cents.join(
-                    F.broadcast(probes),
-                    cents["cid"] == F.col("probe_cid"),
-                )
-                .crossJoin(F.broadcast(q))
-                .select(
-                    F.col("cid").alias("list_id"),
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("cvec"),
-                            F.col("query_vec").cast("array<double>"),
-                            lambda a, b: a * b,
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    ).alias("_off"),
-                )
+            # the persisted search's scorer: one shared LUT across
+            # lists, plus each row's <c_list, q>
+            score = pq_mod.adc_score(
+                knn_mod.query_vector(q), res_lut, res_lists
             )
             frames.append(
-                _hits("ivfpq_residual", pq_mod.pq_topk_adc(
-                    probed_res.join(F.broadcast(offs), "list_id"),
-                    res_books, q, k=k, id_col=id_col, offset_col="_off",
+                _hits("ivfpq_residual", ivf_mod._topk_scored(
+                    probed_res, score, k, id_col
                 ), qid, id_col)
             )
         if include_opq:

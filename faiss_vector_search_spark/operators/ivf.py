@@ -15,16 +15,16 @@ pruning — the Spark analogue of FAISS scanning only probed posting
 lists). This module owns that persisted layout for every tier (see
 "persisted layout" below).
 
-Serving: every persisted single-query search opens the index through
-a cached *index handle* (:func:`_open`, one per path): the tier, the
-table's schema, the centroids (as a frame and as driver rows), and
-the tier's saved model. It is checked on every open against the file
-names under ``<path>/_centroids`` (one Hadoop FS listing, no Spark
-job); a build, retrain or rebuild rewrites that sidecar under new
-names, so the next open reloads, while an append leaves it warm. The
-query vector is probed on the driver (the same (cdist, cid) order and
-sequential fold as :func:`probe_lists`) and scored as a literal, and
-the table is listed per query with the handle's schema — so a warm
+Serving: :func:`search_persisted` is FAISS ``index.search(q, k)`` for
+every saved float tier (flat, PQ, SQ8). It opens the index through a
+cached *index handle* (:func:`_open`, one per path): tier, table
+schema, centroids, and the tier's model, also collected to the driver
+for its one query score. Every open checks it against the file names
+under ``<path>/_centroids`` (one Hadoop FS listing, no Spark job); a
+build, retrain or rebuild rewrites that sidecar under new names, so
+the next open reloads, while an append leaves it warm. The query is
+probed on the driver (the order and fold of :func:`probe_lists`) and
+scored as a literal, and the table is listed per query — so a warm
 query runs one Spark job, the pruned scan with its top-k, and sees
 appended files at once. The batch search keeps its Spark-side probe.
 
@@ -47,7 +47,8 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..functions import vector as V
 from ..io import path_exists
-from .knn import SCORE_DECIMALS, _score_col, score_corpus
+from . import binary, pq, sq
+from .knn import SCORE_DECIMALS, _score_col, query_vector, score_corpus
 
 
 def seeded_centroids(
@@ -383,8 +384,9 @@ def ivf_kmeans_search(
 # list_id, plus one-row-or-small parquet sidecars: _centroids, _codebooks
 # (PQ), _bounds (SQ8), _meta (PQ residual flag), _trained_on (watermark).
 # Readers go through a cached index handle (:func:`_open`): the sidecars
-# and the table schema are read once per build, the table's files are
-# listed fresh on every scan.
+# (collected to the driver for the query scorers) and the table schema
+# are read once per build, the table's files are listed fresh on every
+# scan.
 
 
 def _table(tier: str) -> str:
@@ -433,6 +435,16 @@ def _read_model(spark, path: str, tier: str) -> dict:
     return {}
 
 
+def _query_model(tier: str, model: dict) -> tuple:
+    """The tier's saved model collected to the driver, as its query
+    scorer takes it: PQ ``(codebooks, residual)``, SQ8 ``(mn, mx)``."""
+    if tier == "pq":
+        return pq.collect_codebooks(model["codebooks"]), model["residual"]
+    if tier == "sq8":
+        return sq.collect_bounds(model["bounds"])
+    return ()
+
+
 class _Handle(NamedTuple):
     """What a query needs of a persisted index besides its list files."""
 
@@ -445,6 +457,7 @@ class _Handle(NamedTuple):
     cids: list               # centroid ids, ascending
     cvecs: np.ndarray        # one row per cid, in ``cids`` order
     model: dict              # :func:`_read_model` of the tier
+    query_model: tuple       # the model on the driver, for its scorer
 
 
 _HANDLES: dict[str, _Handle] = {}
@@ -471,12 +484,13 @@ def _open(spark, path: str, tier: str | None = None) -> _Handle:
         t = _tier(spark, path)
         cents = _read_sidecar(spark, path, "centroids")
         rows = sorted(cents.collect(), key=lambda r: r["cid"])
+        model = _read_model(spark, path, t)
         h = _HANDLES[path] = _Handle(
             spark, path, stamp, t,
             spark.read.parquet(f"{path}/{_table(t)}").schema, cents,
             [r["cid"] for r in rows],
             np.array([r["cvec"] for r in rows], dtype=np.float64),
-            _read_model(spark, path, t),
+            model, _query_model(t, model),
         )
     if tier is not None and h.tier != tier:
         raise ValueError(
@@ -520,44 +534,32 @@ def _scan_lists(spark, path: str, list_ids=None) -> DataFrame:
     return _scan(_open(spark, path), list_ids)
 
 
-def _query_vector(query: DataFrame, query_vec_col: str = "query_vec"):
-    """The vector of a one-row query frame, collected once; None when
-    the frame has no row (the search then probes no list)."""
-    rows = query.select(query_vec_col).collect()
-    if len(rows) > 1:
-        raise ValueError(
-            "a persisted single-query search takes one query row; use "
-            "ivf_search_persisted_batch for several"
-        )
-    return [float(x) for x in rows[0][0]] if rows else None
-
-
-def _literal_vec(values) -> Column:
-    """``values`` as an array<double> literal in the plan."""
-    return F.array(*[F.lit(float(x)) for x in values]).cast("array<double>")
-
-
 def _literal_score(metric: str, vec_col: str, qvec) -> Column:
-    """Rounded score of ``vec_col`` against a driver-side query vector
-    — :func:`knn.score_corpus`'s score with the query as a literal
-    instead of a broadcast cross join."""
+    """The flat tier's query score: rounded score of ``vec_col``
+    against a driver-side query vector — :func:`knn.score_corpus`'s
+    score with the query as a literal instead of a broadcast cross
+    join."""
     return F.round(
-        _score_col(metric, F.col(vec_col), _literal_vec(qvec or [])),
+        _score_col(metric, F.col(vec_col), V.literal(qvec or [])),
         SCORE_DECIMALS,
     )
 
 
+def _probe(h: _Handle, qvec, nprobe: int) -> list:
+    """The ``nprobe`` list ids :func:`probe_lists` gives ``qvec``
+    ((cdist, cid) order, the same sequential fold), computed on the
+    driver over the handle's centroids; a None vector probes no list."""
+    if qvec is None or not h.cids:
+        return []
+    d = V.l2_sq_rows(h.cvecs, qvec).tolist()
+    return [c for _, c in sorted(zip(d, h.cids))[:nprobe]]
+
+
 def _open_probed(spark, path: str, qvec, nprobe: int, tier: str = "flat"):
-    """Open a persisted index for one driver-side query vector:
-    ``(handle, table pruned to the probed lists, probe ids)``. The probe
-    runs on the driver over the handle's centroids and returns the ids
-    :func:`probe_lists` would ((cdist, cid) order, the same sequential
-    fold); a None vector probes no list."""
+    """Open a persisted index of ``tier`` for one driver-side query
+    vector: ``(handle, table pruned to the probed lists, probe ids)``."""
     h = _open(spark, path, tier)
-    probe_ids = []
-    if qvec is not None and h.cids:
-        d = V.l2_sq_rows(h.cvecs, qvec).tolist()
-        probe_ids = [c for _, c in sorted(zip(d, h.cids))[:nprobe]]
+    probe_ids = _probe(h, qvec, nprobe)
     return h, _scan(h, probe_ids), probe_ids
 
 
@@ -589,8 +591,6 @@ def _append(
     h = _open(spark, path)
     rows = assign_lists(new, h.centroids, vec_col=vec_col)
     if h.tier != "flat":
-        from . import binary, pq, sq
-
         encode = {"pq": pq, "sq8": sq, "binary": binary}[h.tier].encode_lists
         rows = encode(rows, h.centroids, id_col, vec_col, **h.model)
     # the batch plan (e.g. chunk + embed + assign) runs once, with the
@@ -627,7 +627,7 @@ def save_ivf(
     )
 
 
-def ivf_search_persisted(
+def search_persisted(
     spark,
     path: str,
     query: DataFrame,
@@ -636,23 +636,47 @@ def ivf_search_persisted(
     metric: str = "ip",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    query_vec_col: str = "query_vec",
 ) -> DataFrame:
-    """Search a persisted IVF index: the probe set becomes an ``IN``
-    filter on the partition column, so the parquet scan reads only the
-    ``nprobe`` probed list directories (partition pruning — verified
-    by tests/test_index_store.py) instead of re-assigning the corpus.
-    This is the plan FAISS's scan-only-probed-posting-lists becomes on
-    a cluster: scan fraction = nprobe/nlist of the files, zero
-    compute on unprobed lists.
-
-    The query row is collected once, probed on the driver and scored as
-    a literal, so a warm call runs one Spark job (two when collecting
-    ``query`` runs one): the pruned scan with its top-k."""
-    qvec = _query_vector(query)
-    _, index, _ = _open_probed(spark, path, qvec, nprobe)
-    return _topk_scored(
-        index, _literal_score(metric, vec_col, qvec), k, id_col
-    )
+    """FAISS ``index.search(q, k)`` on a saved IVF index of any float
+    tier, read from its layout: ``(id, list_id, score)``, best first,
+    ties to the lowest id. The probe set becomes an ``IN`` filter on
+    the partition column, so the scan reads only the ``nprobe`` probed
+    list directories (FAISS scanning only the probed posting lists).
+    The query row is collected once and scored as a literal by the
+    tier's query score (:func:`_literal_score`, :func:`pq.adc_score`,
+    :func:`sq.sq_score`) with the handle's model, so a warm call runs
+    the pruned scan plus, if it takes one, the job collecting
+    ``query``. A frame with no row returns no row. PQ/SQ8 codes score
+    inner product only and binary codes rank by Hamming distance
+    (``binary.ivfbin_search_persisted``): either raises, naming the
+    tier."""
+    h = _open(spark, path)
+    if h.tier == "binary":
+        raise ValueError(
+            f"{path} is an IVF-BINARY index: it ranks by Hamming distance, "
+            "search it with binary.ivfbin_search_persisted"
+        )
+    if h.tier != "flat" and metric != "ip":
+        raise ValueError(
+            f"{path} is an IVF-{h.tier.upper()} index: its codes score "
+            f"inner product only (metric='ip'), not metric={metric!r}"
+        )
+    qvec = query_vector(query, query_vec_col)
+    probe_ids = _probe(h, qvec, nprobe)
+    if qvec is None:
+        score = F.lit(None).cast("double")
+    elif h.tier == "pq":
+        books, residual = h.query_model
+        lists = None
+        if residual:  # the probed lists' centroids, for their <c, q>
+            lists = (probe_ids, h.cvecs[[h.cids.index(c) for c in probe_ids]])
+        score = pq.adc_score(qvec, books, lists)
+    elif h.tier == "sq8":
+        score = sq.sq_score(qvec, *h.query_model)
+    else:
+        score = _literal_score(metric, vec_col, qvec)
+    return _topk_scored(_scan(h, probe_ids), score, k, id_col)
 
 
 def ivf_search_persisted_batch(
@@ -682,7 +706,7 @@ def ivf_search_persisted_batch(
     the probe-overlap factor. Only (query_id, id, score) triples
     shuffle for the per-query rank window.
 
-    Equality with the per-query :func:`ivf_search_persisted` loop and
+    Equality with the per-query :func:`search_persisted` loop and
     the partition-prune plan fact are pytest-gated.
     """
     df, _ = ivf_search_persisted_batch_probed(

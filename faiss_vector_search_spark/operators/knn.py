@@ -36,6 +36,19 @@ def _score_col(metric: str, a, b):
     raise ValueError(f"unknown metric: {metric}")
 
 
+def query_vector(query: DataFrame, query_vec_col: str = "query_vec"):
+    """The vector of a one-row query frame, collected once, for a
+    scorer that takes the query as a literal; None when the frame has
+    no row. More rows raise: a single-query scorer would pool them."""
+    rows = query.select(query_vec_col).collect()
+    if len(rows) > 1:
+        raise ValueError(
+            "a single-query search takes exactly one query row; use "
+            "knn.topk_join or ivf.ivf_search_persisted_batch for several"
+        )
+    return [float(x) for x in rows[0][0]] if rows else None
+
+
 def score_corpus(
     corpus: DataFrame,
     query: DataFrame,

@@ -19,12 +19,14 @@ Design (all JVM-side Column expressions, no Python in any hot path):
 - **encode**: pure map over the broadcast codebooks → ``codes``
   array<int> of length m. The corpus never shuffles.
 - **search (ADC)**: asymmetric distance computation — the query
-  builds an m × ksub inner-product table against the codebooks (one
-  tiny row), which broadcast-joins onto the codes scan; each vector's
-  approximate score is the sum of m table lookups
-  (``zip_with`` + ``aggregate``), and top-k compiles to
-  TakeOrderedAndProject (per-partition top-k + driver merge, no
-  corpus shuffle) exactly like the flat kNN path.
+  builds an m × ksub inner-product table against the codebooks on
+  the driver (:func:`adc_score`, the one PQ query score), which rides
+  the codes scan as a literal; each vector's approximate score is the
+  sum of m table lookups (``zip_with`` + ``aggregate``), and top-k
+  compiles to TakeOrderedAndProject (per-partition top-k + driver
+  merge, no corpus shuffle) exactly like the flat kNN path. A saved
+  IVF-PQ index is searched by ``ivf.search_persisted``, whose index
+  handle holds the collected codebooks and residual flag.
 
 Approximate by construction → rows-only gated: tests bound ADC score
 error and top-k overlap vs the exact scan (tests/test_pq.py).
@@ -32,11 +34,12 @@ error and top-k overlap vs the exact scan (tests/test_pq.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
-from .knn import SCORE_DECIMALS
+from .knn import SCORE_DECIMALS, query_vector, topk
 
 
 def _subvec(vec, j: int, dsub: int):
@@ -214,8 +217,6 @@ def _pq_train_numpy(
     """Driver-side Lloyd over the bounded training sample — the arrow
     engine of :func:`pq_train`. Same seeding / empty-cell / rounding
     contract as the sql engine."""
-    import numpy as np
-
     rows = sample.select(id_col, vec_col).orderBy(F.col(id_col).asc()).collect()
     if len(rows) < ksub:
         raise ValueError(
@@ -305,19 +306,11 @@ def _pq_encode_arrow(
 ) -> DataFrame:
     """Arrow engine for :func:`pq_encode`: per batch, one
     (batch × dsub) @ (dsub × ksub) matmul + argmin per subspace."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
-    cb_rows = codebooks.orderBy("j", "cid").collect()
-    cbs = [
-        np.vstack([
-            np.asarray(r.cvec, dtype=np.float64)
-            for r in cb_rows
-            if r.j == j
-        ])
-        for j in range(m)
-    ]
+    cbs = [np.asarray(cb, dtype=np.float64)
+           for cb in collect_codebooks(codebooks)]
     cnorms = [(cb * cb).sum(axis=1) for cb in cbs]
     in_fields = {f.name: f for f in corpus.schema.fields}
     out_schema = T.StructType(
@@ -350,6 +343,52 @@ def _pq_encode_arrow(
     return corpus.select(*cols).mapInPandas(encode, schema=out_schema)
 
 
+def collect_codebooks(codebooks: DataFrame) -> list:
+    """The (j, cid, cvec) codebooks on the driver (one Spark job):
+    ``books[j][i]`` is subspace j's i-th centroid in cid order — the
+    positions :func:`_codebook_row` gives them, so a code indexes it."""
+    books: dict[int, list] = {}
+    for r in codebooks.orderBy("j", "cid").collect():
+        books.setdefault(r["j"], []).append([float(x) for x in r["cvec"]])
+    return [books[j] for j in sorted(books)]
+
+
+def adc_score(qvec, books, residual_lists=None) -> Column:
+    """Every PQ search's query score: the rounded ADC score of the
+    ``codes`` column, Σ_j tbl[j][codes[j]], for a driver-side query.
+    The m × ksub table tbl[j][i] = ⟨q_j, books[j][i]⟩ is built on the
+    driver (V.dot's fold over the query slices) and rides the plan as
+    one literal, so the codes scan needs no join.
+
+    ``residual_lists`` = ``(list ids, their centroid rows)`` scores
+    residual codes: x·q = ⟨c_list, q⟩ + ⟨r, q⟩, so each row adds its
+    list's constant (driver-side, V.dot's fold again) to the ADC sum
+    — one shared table for all lists, the identity that makes
+    IP-metric residual ADC cheap."""
+    q = np.asarray(qvec, dtype=np.float64)
+    dsub = len(books[0][0])
+    tbl = [
+        V.dot_rows(cb, q[j * dsub : (j + 1) * dsub])
+        for j, cb in enumerate(books)
+    ]
+    adc = F.aggregate(
+        F.zip_with(
+            F.col("codes"),
+            V.literal(tbl),
+            lambda c, row: F.element_at(row, c + 1),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    if residual_lists is not None:
+        ids, cvecs = residual_lists
+        offsets = F.map_from_arrays(
+            V.literal(ids), V.literal(V.dot_rows(cvecs, q))
+        )
+        adc = adc + offsets[F.col("list_id")]
+    return F.round(adc, SCORE_DECIMALS)
+
+
 def pq_topk_adc(
     codes: DataFrame,
     codebooks: DataFrame,
@@ -357,52 +396,20 @@ def pq_topk_adc(
     k: int = 10,
     id_col: str = "vec_id",
     query_vec_col: str = "query_vec",
-    offset_col: str | None = None,
 ) -> DataFrame:
     """Approximate top-k by asymmetric distance: score(v) ≈
     Σ_j  ⟨q_sub_j, codebook[j][codes[j]]⟩  — m lookups into the
-    query's precomputed inner-product table. The table is one tiny
-    row (m × ksub doubles) broadcast onto the codes scan; ranking
-    compiles to TakeOrderedAndProject. Ties break to the lowest id
-    like the exact kNN path.
-
-    ``offset_col``: per-row DOUBLE added to the ADC sum before
-    rounding — residual-encoded IVF-PQ passes the list's ⟨c_list, q⟩
-    here, because x·q = c·q + r·q decomposes the score into a per-list
-    constant plus the residual lookup (one shared LUT for all lists,
-    the identity that makes IP-metric residual ADC cheap)."""
-    dsub = codebooks.select(F.size(F.first("cvec"))).first()[0]
-    tbl = (
-        query.crossJoin(_codebook_row(codebooks))
-        .select(
-            F.transform(
-                F.col("cbs"),
-                lambda cb, j: F.transform(
-                    cb,
-                    lambda cvec: V.dot(
-                        F.slice(
-                            F.col(query_vec_col), j * dsub + 1, dsub
-                        ),
-                        cvec,
-                    ),
-                ),
-            ).alias("tbl")
-        )
-    )
-    adc = F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("tbl"),
-            lambda c, row: F.element_at(row, c + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    if offset_col is not None:
-        adc = adc + F.col(offset_col)
-    scored = codes.crossJoin(F.broadcast(tbl)).select(
+    query's precomputed inner-product table (:func:`adc_score`; the
+    one-row query and the codebooks are collected to build it, two
+    small Spark jobs). Ranking compiles to TakeOrderedAndProject over
+    the codes scan; ties break to the lowest id like the exact kNN
+    path."""
+    qvec = query_vector(query, query_vec_col)
+    if qvec is None:
+        raise ValueError("pq_topk_adc takes exactly one query row, got none")
+    scored = codes.select(
         F.col(id_col),
-        F.round(adc, SCORE_DECIMALS).alias("score"),
+        adc_score(qvec, collect_codebooks(codebooks)).alias("score"),
     )
     return scored.orderBy(
         F.col("score").desc(), F.col(id_col).asc()
@@ -432,16 +439,17 @@ def pq_topk_rerank(
         codes, codebooks, query, k=k * expand,
         id_col=id_col, query_vec_col=query_vec_col,
     ).select(id_col)
-    candidates = corpus.join(F.broadcast(shortlist), id_col, "left_semi")
-    scored = candidates.crossJoin(F.broadcast(query)).select(
-        F.col(id_col),
-        F.round(
-            V.ip_score(F.col(vec_col), F.col(query_vec_col)), SCORE_DECIMALS
-        ).alias("score"),
+    return _rescore(
+        corpus, shortlist, query, k, id_col, vec_col, query_vec_col
     )
-    return scored.orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    ).limit(k)
+
+
+def _rescore(corpus, shortlist, query, k, id_col, vec_col, query_vec_col):
+    """The rerank stage: exact inner-product top-k of the shortlisted
+    ids (a broadcast semi-join point lookup on the float corpus)."""
+    hits = corpus.join(F.broadcast(shortlist), id_col, "left_semi")
+    q = query.select(F.col(query_vec_col).alias("query_vec"))
+    return topk(hits, q, k=k, metric="ip", id_col=id_col, vec_col=vec_col)
 
 
 def ivf_residual_frame(
@@ -518,12 +526,13 @@ def save_ivfpq(
     billion-vector search tractable.
 
     ``residual=False`` quantizes the RAW vector (one shared codebook
-    valid across any probe union, :func:`pq_topk_adc` unchanged);
+    valid across any probe union, scored like :func:`pq_topk_adc`);
     ``residual=True`` quantizes x − c_list (FAISS ``IndexIVFPQ``'s
     default — finer codes on clustered data for the same bits;
     codebooks must then be TRAINED on :func:`ivf_residual_frame`, and
     search adds the per-list ⟨c, q⟩ offset back, which the persisted
     flag records so a later session searches and appends correctly).
+    Search it with ``ivf.search_persisted``.
     """
     from .ivf import _write_lists, assign_lists
 
@@ -536,47 +545,6 @@ def save_ivfpq(
     )
     _write_lists(
         codes, centroids, path, "pq", codebooks=codebooks, residual=residual
-    )
-
-
-def ivfpq_search_persisted(
-    spark,
-    path: str,
-    query: DataFrame,
-    nprobe: int = 4,
-    k: int = 10,
-    id_col: str = "vec_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Search a persisted IVF-PQ index: probe the nprobe nearest
-    coarse centroids, prune the codes scan to those list-id
-    partitions, ADC-rank inside them. Scan cost =
-    (nprobe/nlist) × (m bytes / 4·dim bytes) of a flat float scan —
-    at nlist=16, nprobe=4, m=16 on 64-dim floats that is 1/64 of the
-    bytes a flat search reads."""
-    from .ivf import _literal_vec, _open_probed, _query_vector
-
-    qvec = _query_vector(query, query_vec_col)
-    h, codes, probe_ids = _open_probed(spark, path, qvec, nprobe, "pq")
-    books = h.model["codebooks"]
-    if not h.model["residual"]:
-        return pq_topk_adc(
-            codes, books, query, k=k, id_col=id_col,
-            query_vec_col=query_vec_col,
-        )
-    # residual codes: x·q = ⟨c_list, q⟩ + ⟨r, q⟩ — the probed lists'
-    # constants (V.dot's fold, on the driver over the handle's
-    # centroids) ride in as a literal map, the residual ADC shares ONE
-    # query LUT across lists
-    rows = [h.cids.index(c) for c in probe_ids]
-    offs = V.dot_rows(h.cvecs[rows], qvec) if rows else []
-    off_map = F.map_from_arrays(
-        F.array(*[F.lit(c) for c in probe_ids]).cast("array<int>"),
-        _literal_vec(offs),
-    )
-    return pq_topk_adc(
-        codes.withColumn("_off", off_map[F.col("list_id")]), books, query,
-        k=k, id_col=id_col, query_vec_col=query_vec_col, offset_col="_off",
     )
 
 
@@ -607,13 +575,6 @@ def opq_topk_rerank(
         codes, codebooks, rq, k=k * expand,
         id_col=id_col, query_vec_col=query_vec_col,
     ).select(id_col)
-    candidates = corpus.join(F.broadcast(shortlist), id_col, "left_semi")
-    scored = candidates.crossJoin(F.broadcast(query)).select(
-        F.col(id_col),
-        F.round(
-            V.ip_score(F.col(vec_col), F.col(query_vec_col)), SCORE_DECIMALS
-        ).alias("score"),
+    return _rescore(
+        corpus, shortlist, query, k, id_col, vec_col, query_vec_col
     )
-    return scored.orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    ).limit(k)

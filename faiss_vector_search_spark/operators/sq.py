@@ -16,9 +16,13 @@ Scale posture (100 TB):
   min/max before the shuffle) — the shuffle carries P×dim rows, never
   vectors;
 - bounds are a dim-row model table; they broadcast as ONE row of two
-  arrays onto the encode/search scans (same shape as PQ codebooks);
+  arrays onto the encode scan (same shape as PQ codebooks), and ride
+  the search scan as two literals with the query (:func:`sq_score`,
+  the one SQ8 query score);
 - encode is map-only; search is scan + TakeOrderedAndProject — the
-  corpus never shuffles.
+  corpus never shuffles. A saved IVF-SQ8 index is searched by
+  ``ivf.search_persisted``, whose index handle holds the collected
+  bounds.
 
 Determinism: floor-quantization, not round (Spark HALF_UP vs DuckDB
 half-even would diverge); every float expression keeps the same
@@ -27,12 +31,12 @@ association order as the oracle SQL so IEEE results are bit-equal.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
-
-SCORE_DECIMALS = 6
+from .knn import SCORE_DECIMALS, query_vector
 
 
 def sq_train(corpus: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -110,6 +114,28 @@ def sq_decode_expr(codes, mn_arr, mx_arr):
     )
 
 
+def collect_bounds(bounds: DataFrame) -> tuple[list, list]:
+    """The dim-row bounds on the driver (one Spark job): pos-ordered
+    ``(mn, mx)`` lists, the arrays :func:`_bounds_row` broadcasts."""
+    rows = bounds.orderBy("pos").collect()
+    return [r["vmin"] for r in rows], [r["vmax"] for r in rows]
+
+
+def sq_score(qvec, mn, mx) -> Column:
+    """Every SQ8 search's query score: the midpoint decode of the
+    ``codes`` column against the bounds, dotted with a driver-side
+    query, rounded. Bounds and query ride the plan as literals, so the
+    codes scan needs no join; the arithmetic is :func:`sq_decode_expr`
+    and V.dot, the oracle's association order."""
+    return F.round(
+        V.dot(
+            sq_decode_expr(F.col("codes"), V.literal(mn), V.literal(mx)),
+            V.literal(qvec),
+        ),
+        SCORE_DECIMALS,
+    )
+
+
 def sq_topk(
     codes: DataFrame,
     bounds: DataFrame,
@@ -120,72 +146,44 @@ def sq_topk(
     engine: str = "sql",
 ) -> DataFrame:
     """Approximate top-k inner product over SQ8 codes: decode the
-    midpoint reconstruction in-row, dot with the broadcast query,
-    rank. Compiles to scan + TakeOrderedAndProject — the 4×-smaller
-    codes are all that is read, and nothing shuffles.
+    midpoint reconstruction in-row, dot with the query, rank. Compiles
+    to scan + TakeOrderedAndProject — the 4×-smaller codes are all
+    that is read, and nothing shuffles.
 
-    ``engine``: "sql" = the interpreted decode+dot fold, association-
-    order-exact against the DuckDB oracle; "arrow" = one BLAS
-    decode+matvec per Arrow batch (production full-corpus scans — the
-    r4 sweep measured the fold at 11.2s for a 200k-row flat scan; the
-    persisted IVF-SQ8 tier reads only nprobe/nlist of the codes, so
-    there the fold cost is already marginal). Scores round to the
-    same 6 decimals; only float summation order differs."""
-    if engine == "arrow":
-        return _sq_topk_arrow(codes, bounds, query, k, id_col, query_vec_col)
-    if engine != "sql":
+    ``engine``: "sql" = :func:`sq_score`, the interpreted decode+dot
+    fold, association-order-exact against the DuckDB oracle (the
+    one-row query and the bounds are collected for it, two small Spark
+    jobs); "arrow" = one BLAS decode+matvec per Arrow batch
+    (production full-corpus scans — the r4 sweep measured the fold at
+    11.2s for a 200k-row flat scan; the persisted IVF-SQ8 tier reads
+    only nprobe/nlist of the codes, so there the fold cost is already
+    marginal). Scores round to the same 6 decimals; only float
+    summation order differs."""
+    if engine not in ("sql", "arrow"):
         raise ValueError(f"unknown sq_topk engine: {engine}")
-    # single-query contract (enforced in BOTH engines): the crossJoin
-    # below would silently pool scores across a multi-row query frame
-    if query.limit(2).count() != 1:
-        raise ValueError(
-            "sq_topk takes exactly one query row; use knn_batch for "
-            "multi-query retrieval"
-        )
-    scored = codes.crossJoin(_bounds_row(bounds)).crossJoin(
-        F.broadcast(query)
-    ).select(
-        F.col(id_col),
-        F.round(
-            V.dot(
-                sq_decode_expr(
-                    F.col("codes"), F.col("mn_arr"), F.col("mx_arr")
-                ),
-                F.col(query_vec_col),
-            ),
-            SCORE_DECIMALS,
-        ).alias("score"),
+    # single-query contract (both engines): one query vector, never
+    # scores pooled across a multi-row frame
+    qvec = query_vector(query, query_vec_col)
+    if qvec is None:
+        raise ValueError("sq_topk takes exactly one query row, got none")
+    mn, mx = collect_bounds(bounds)
+    if engine == "arrow":
+        return _sq_topk_arrow(codes, mn, mx, qvec, k, id_col)
+    scored = codes.select(
+        F.col(id_col), sq_score(qvec, mn, mx).alias("score")
     )
     return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
 
 
 def _sq_topk_arrow(
-    codes: DataFrame,
-    bounds: DataFrame,
-    query: DataFrame,
-    k: int,
-    id_col: str,
-    query_vec_col: str,
+    codes: DataFrame, mn, mx, qvec, k: int, id_col: str
 ) -> DataFrame:
     """Arrow engine for :func:`sq_topk`: decoded = mn + (c+0.5)·scale
     vectorized per batch, scored with one matvec."""
-    import numpy as np
     import pandas as pd
 
-    brows = bounds.orderBy("pos").collect()
-    mn = np.array([r.vmin for r in brows], dtype=np.float64)
-    mx = np.array([r.vmax for r in brows], dtype=np.float64)
+    mn, mx, q = (np.array(v, dtype=np.float64) for v in (mn, mx, qvec))
     scale = (mx - mn) / 256.0
-    qrows = query.select(query_vec_col).limit(2).collect()
-    if len(qrows) != 1:
-        raise ValueError(
-            "sq_topk takes exactly one query row (the sql engine "
-            "crossJoins the query frame; a multi-row frame would "
-            "silently diverge between engines) — got "
-            f"{'0' if not qrows else '>=2'}; use knn_batch for "
-            "multi-query retrieval"
-        )
-    q = np.asarray(qrows[0][0], dtype=np.float64)
 
     def score(batches):
         for pdf in batches:
@@ -231,7 +229,7 @@ def save_ivfsq(
 
     Codes quantize the RAW vector against global bounds (not the
     list residual), so one bounds row serves every list and
-    :func:`sq_topk` runs unchanged on any probe union."""
+    :func:`sq_score` ranks any probe union (``ivf.search_persisted``)."""
     from .ivf import _write_lists, assign_lists
 
     assigned = assign_lists(
@@ -250,29 +248,4 @@ def encode_lists(assigned, centroids, id_col, vec_col, bounds) -> DataFrame:
     return sq_encode(
         assigned, bounds, id_col=id_col, vec_col=vec_col,
         keep_cols=("list_id",),
-    )
-
-
-def ivfsq_search_persisted(
-    spark,
-    path: str,
-    query: DataFrame,
-    nprobe: int = 4,
-    k: int = 10,
-    id_col: str = "vec_id",
-    query_vec_col: str = "query_vec",
-    engine: str = "sql",
-) -> DataFrame:
-    """Search a persisted IVF-SQ8 index: probe the nprobe nearest
-    coarse centroids, prune the codes scan to those list partitions,
-    decode-and-rank inside them. Scan cost = (nprobe/nlist) × 1/4 of
-    a flat float scan's bytes. ``engine`` → :func:`sq_topk`."""
-    from .ivf import _open_probed, _query_vector
-
-    h, codes, _ = _open_probed(
-        spark, path, _query_vector(query, query_vec_col), nprobe, "sq8"
-    )
-    return sq_topk(
-        codes, h.model["bounds"], query, k=k,
-        id_col=id_col, query_vec_col=query_vec_col, engine=engine,
     )

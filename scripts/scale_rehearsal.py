@@ -235,7 +235,7 @@ def main() -> None:
         emb, cents, f"{base}/ivf", assign_engine="arrow"))
     results.append(run(
         "ivf_search_persisted",
-        lambda: ivf_mod.ivf_search_persisted(
+        lambda: ivf_mod.search_persisted(
             spark, f"{base}/ivf", q_float, nprobe=8, k=10),
         gates=("prune",), runs=5,
     ))
@@ -245,7 +245,7 @@ def main() -> None:
         emb, cents, bounds, f"{base}/ivfsq", assign_engine="arrow"))
     results.append(run(
         "ivfsq_search_persisted",
-        lambda: sq_mod.ivfsq_search_persisted(
+        lambda: ivf_mod.search_persisted(
             spark, f"{base}/ivfsq", q_float, nprobe=8, k=10),
         gates=("prune",), runs=5,
     ))
@@ -257,22 +257,17 @@ def main() -> None:
         assign_engine="arrow", encode_engine="arrow"))
     results.append(run(
         "ivfpq_search_persisted",
-        lambda: pq_mod.ivfpq_search_persisted(
+        lambda: ivf_mod.search_persisted(
             spark, f"{base}/ivfpq", q_float, nprobe=8, k=10),
         gates=("prune",), runs=5,
     ))
 
     timed_build("build_ivf_binary", lambda: bin_mod.save_ivfbin(
         emb, cents, f"{base}/ivfbin", assign_engine="arrow"))
-    q_code = bin_mod.binarize(
-        q_float.select(F.col("query_vec").alias("embedding")).withColumn(
-            "vec_id", F.lit(0)
-        )
-    ).select(F.col("code").alias("query_code"))
     results.append(run(
         "ivfbin_search_persisted",
         lambda: bin_mod.ivfbin_search_persisted(
-            spark, f"{base}/ivfbin", q_float, q_code, nprobe=8, k=10),
+            spark, f"{base}/ivfbin", q_float, nprobe=8, k=10),
         gates=("prune",), runs=5,
     ))
 

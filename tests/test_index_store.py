@@ -64,7 +64,7 @@ def test_clear_index_keeps_schema(spark, assigned, tmp_path_factory):
 
 
 def test_persisted_ivf_search_matches_in_memory(spark, emb, tmp_path_factory):
-    """save_ivf → ivf_search_persisted ≡ in-memory ivf_search, with
+    """save_ivf → search_persisted ≡ in-memory ivf_search, with
     the probe filter pruning partitions at the scan."""
     path = str(tmp_path_factory.mktemp("idx") / "ivf")
     cents = ivf.seeded_centroids(emb, 8)
@@ -73,7 +73,7 @@ def test_persisted_ivf_search_matches_in_memory(spark, emb, tmp_path_factory):
     q = emb.where(F.col("vec_id") == 3).select(
         F.col("embedding").alias("query_vec")
     )
-    persisted = ivf.ivf_search_persisted(spark, path, q, nprobe=2, k=5)
+    persisted = ivf.search_persisted(spark, path, q, nprobe=2, k=5)
     plan = persisted._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "list_id" in plan
 

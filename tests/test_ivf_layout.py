@@ -1,9 +1,11 @@
 """Persisted IVF layout gates (operators/ivf.py owns the layout): every
 tier's persisted search prunes its scan to exactly the probed lists,
-and the IVF scorers accept only the metrics knn scores."""
+the IVF scorers accept only the metrics knn scores (PQ/SQ8 codes: inner
+product), and a warm query on the cached index handle runs one job."""
 
 from __future__ import annotations
 
+import itertools
 import re
 
 import pytest
@@ -46,29 +48,26 @@ def _build_and_search(spark, tier, emb, cents, query, docs, path):
         return embed.chunk_search_persisted(
             spark, path, QUERY_TEXT, k=5, nprobe=NPROBE
         ), qv
+    if tier == "binary":
+        binary.save_ivfbin(emb, cents, path)
+        return binary.ivfbin_search_persisted(
+            spark, path, query, nprobe=NPROBE, k=5
+        ), query
+    _save(tier, emb, cents, path)
+    return ivf.search_persisted(spark, path, query, nprobe=NPROBE, k=5), query
+
+
+def _save(tier, emb, cents, path):
+    """Build a float-tier index: flat, PQ (raw or residual) or SQ8."""
     if tier == "ivf":
         ivf.save_ivf(emb, cents, path)
-        return ivf.ivf_search_persisted(
-            spark, path, query, nprobe=NPROBE, k=5
-        ), query
-    if tier == "pq":
-        books = pq.pq_train(emb, m=4, ksub=16, iters=2)
-        pq.save_ivfpq(emb, cents, books, path)
-        return pq.ivfpq_search_persisted(
-            spark, path, query, nprobe=NPROBE, k=5
-        ), query
-    if tier == "sq":
+    elif tier in ("pq", "pq_residual"):
+        residual = tier == "pq_residual"
+        train = pq.ivf_residual_frame(emb, cents) if residual else emb
+        books = pq.pq_train(train, m=4, ksub=16, iters=2)
+        pq.save_ivfpq(emb, cents, books, path, residual=residual)
+    else:
         sq.save_ivfsq(emb, cents, sq.sq_train(emb), path)
-        return sq.ivfsq_search_persisted(
-            spark, path, query, nprobe=NPROBE, k=5
-        ), query
-    binary.save_ivfbin(emb, cents, path)
-    qcode = binary.binarize(
-        query.select(F.col("query_vec").alias("embedding"))
-    ).select(F.col("code").alias("query_code"))
-    return binary.ivfbin_search_persisted(
-        spark, path, query, qcode, nprobe=NPROBE, k=5
-    ), query
 
 
 @pytest.mark.parametrize("tier", ["ivf", "chunk", "pq", "sq", "binary"])
@@ -95,6 +94,52 @@ def test_persisted_search_prunes_to_probe_set(
         assert {int(x) for x in m.group(1).split(",")} == probes
 
 
+def test_search_persisted_refuses_other_tiers_and_metrics(
+    spark, emb, cents, query, tmp_path
+):
+    """A binary index ranks by Hamming distance and PQ/SQ8 codes score
+    inner product only: either mismatch names the tier."""
+    path = str(tmp_path / "binary")
+    binary.save_ivfbin(emb, cents, path)
+    with pytest.raises(ValueError, match="IVF-BINARY.*ivfbin_search_persisted"):
+        ivf.search_persisted(spark, path, query, nprobe=NPROBE)
+    for tier, name in (("pq", "IVF-PQ"), ("sq", "IVF-SQ8")):
+        path = str(tmp_path / tier)
+        _save(tier, emb, cents, path)
+        with pytest.raises(ValueError, match=f"{name} index.*metric='l2'"):
+            ivf.search_persisted(spark, path, query, metric="l2")
+
+
+def test_driver_literals_match_the_jvm(spark):
+    """What a persisted query computes on the driver enters the plan
+    unchanged: V.literal doubles parse back bit for bit, and
+    binary.sign_code packs a vector exactly as binarize does (a short
+    last word, zeros, -0.0 and NaN included)."""
+    import math
+    import struct
+
+    from faiss_vector_search_spark.functions import vector as V
+
+    vals = [0.1, 1 / 3, -0.0, 5e-324, -2.5e-308, 1.7976931348623157e308,
+            -1e22, 123456789.123456789, float("inf"), float("-inf")]
+    got = spark.range(1).select(V.literal(vals)).first()[0]
+    assert [struct.pack("d", x) for x in got] == [
+        struct.pack("d", x) for x in vals
+    ]
+    assert math.isnan(spark.range(1).select(
+        V.literal([float("nan")])).first()[0][0])
+    vecs = [
+        [0.5, -1.0, 0.0, -0.0, float("nan")] * 14,   # 70 dims: 3 words
+        [-1.0] * 32,
+        [1.0] * 31,
+    ]
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vecs)], "i int, embedding array<double>"
+    )
+    want = {r.i: list(r.code) for r in binary.binarize(df).collect()}
+    assert {i: binary.sign_code(v) for i, v in enumerate(vecs)} == want
+
+
 def test_unknown_metric_raises(emb, query):
     with pytest.raises(ValueError, match="unknown metric"):
         ivf.ivf_search(emb, query, nlist=NLIST, nprobe=NPROBE, metric="bogus")
@@ -114,10 +159,13 @@ def test_cosine_full_probe_equals_exact_topk(emb, query, cents):
 # --- the cached index handle (ivf._open) --------------------------------
 
 
+_GROUPS = itertools.count()
+
+
 def _jobs(spark, run) -> int:
     """Spark jobs one call of ``run`` starts (StatusTracker job group)."""
     sc = spark.sparkContext
-    group = f"ivf-layout-{id(run)}"
+    group = f"ivf-layout-{next(_GROUPS)}"
     sc.setJobGroup(group, group)
     try:
         run()
@@ -172,8 +220,10 @@ def test_warm_persisted_queries_run_one_job(
     spark, sf_small, emb, cents, tmp_path
 ):
     """A warm chunk query is one Spark job (the pruned scan with its
-    top-k); a flat query whose vector comes from createDataFrame adds
-    at most the job that collects it."""
+    top-k); a query on any other tier (flat, raw or residual PQ, SQ8,
+    binary) whose vector comes from createDataFrame adds at most the
+    job that collects it: the handle holds the tier's model, so no
+    query reads it again."""
     docs = fio.load_table(spark, sf_small, "documents")
     chunks = str(tmp_path / "chunks")
     embed.chunk_index_build(docs, chunks, nlist=NLIST)
@@ -186,13 +236,19 @@ def test_warm_persisted_queries_run_one_job(
     chunk_query()
     assert _jobs(spark, chunk_query) == 1
 
-    flat = str(tmp_path / "flat")
-    ivf.save_ivf(emb, cents, flat)
     qvec = emb.where(F.col("vec_id") == 3).first()["embedding"]
     query = spark.createDataFrame([(qvec,)], "query_vec array<double>")
+    for tier in ("ivf", "pq", "pq_residual", "sq", "binary"):
+        path = str(tmp_path / tier)
+        if tier == "binary":
+            binary.save_ivfbin(emb, cents, path)
+            search = binary.ivfbin_search_persisted
+        else:
+            _save(tier, emb, cents, path)
+            search = ivf.search_persisted
 
-    def flat_query():
-        ivf.ivf_search_persisted(spark, flat, query, nprobe=NPROBE).collect()
+        def tier_query(search=search, path=path):
+            search(spark, path, query, nprobe=NPROBE).collect()
 
-    flat_query()
-    assert _jobs(spark, flat_query) <= 2
+        tier_query()
+        assert _jobs(spark, tier_query) <= 2, tier

@@ -73,8 +73,8 @@ def test_ivf_append_touched_only_and_full_parity(
 
     ivf_mod.save_ivf(emb, cents, full)
     q = _query(emb)
-    got = ivf_mod.ivf_search_persisted(spark, inc, q, nprobe=8).collect()
-    want = ivf_mod.ivf_search_persisted(spark, full, q, nprobe=8).collect()
+    got = ivf_mod.search_persisted(spark, inc, q, nprobe=8).collect()
+    want = ivf_mod.search_persisted(spark, full, q, nprobe=8).collect()
     assert got == want
 
 
@@ -104,8 +104,8 @@ def test_ivfpq_append_parity(spark, emb, split, tmp_path):
 
     pq_mod.save_ivfpq(emb, cents, books, full)
     q = _query(emb)
-    got = pq_mod.ivfpq_search_persisted(spark, inc, q, nprobe=8).collect()
-    want = pq_mod.ivfpq_search_persisted(spark, full, q, nprobe=8).collect()
+    got = ivf_mod.search_persisted(spark, inc, q, nprobe=8).collect()
+    want = ivf_mod.search_persisted(spark, full, q, nprobe=8).collect()
     assert got == want
 
 
@@ -118,8 +118,8 @@ def test_ivfsq_append_parity(spark, emb, split, tmp_path):
     lifecycle.append(spark, inc, batch)
     sq_mod.save_ivfsq(emb, cents, bounds, full)
     q = _query(emb)
-    got = sq_mod.ivfsq_search_persisted(spark, inc, q, nprobe=8).collect()
-    want = sq_mod.ivfsq_search_persisted(spark, full, q, nprobe=8).collect()
+    got = ivf_mod.search_persisted(spark, inc, q, nprobe=8).collect()
+    want = ivf_mod.search_persisted(spark, full, q, nprobe=8).collect()
     assert got == want
 
 
@@ -131,15 +131,8 @@ def test_ivfbin_append_parity(spark, emb, split, tmp_path):
     lifecycle.append(spark, inc, batch)
     binary_mod.save_ivfbin(emb, cents, full)
     q = _query(emb)
-    qcode = binary_mod.binarize(
-        _query(emb).select(F.col("query_vec").alias("embedding"))
-    ).select(F.col("code").alias("query_code"))
-    got = binary_mod.ivfbin_search_persisted(
-        spark, inc, q, qcode, nprobe=8
-    ).collect()
-    want = binary_mod.ivfbin_search_persisted(
-        spark, full, q, qcode, nprobe=8
-    ).collect()
+    got = binary_mod.ivfbin_search_persisted(spark, inc, q, nprobe=8).collect()
+    want = binary_mod.ivfbin_search_persisted(spark, full, q, nprobe=8).collect()
     assert got == want
 
 
@@ -181,7 +174,7 @@ def _recall_at_k(spark, path, emb, qid, nprobe, k=10):
     }
     got = {
         r.vec_id
-        for r in ivf_mod.ivf_search_persisted(
+        for r in ivf_mod.search_persisted(
             spark, path, q, nprobe=nprobe, k=k
         ).collect()
     }

@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from faiss_vector_search_spark import io as fio
-from faiss_vector_search_spark.operators import knn, pq
+from faiss_vector_search_spark.operators import ivf, knn, pq
 
 M, KSUB = 16, 64
 
@@ -139,7 +139,7 @@ class TestIVFPQ:
         from faiss_vector_search_spark.operators import ivf
 
         q = _query(emb, 0)
-        got = pq.ivfpq_search_persisted(spark, index_path, q, nprobe=3, k=10)
+        got = ivf.search_persisted(spark, index_path, q, nprobe=3, k=10)
         cents = spark.read.parquet(f"{index_path}/_centroids")
         probes = [
             r.probe_cid for r in ivf.probe_lists(q, cents, 3).collect()
@@ -161,7 +161,7 @@ class TestIVFPQ:
         q = _query(emb, 7)
         got = {
             r.vec_id
-            for r in pq.ivfpq_search_persisted(
+            for r in ivf.search_persisted(
                 spark, index_path, q, nprobe=8, k=10
             ).collect()
         }
@@ -282,7 +282,7 @@ class TestResidualIVFPQ:
             for name in ("raw", "res"):
                 got = {
                     r.vec_id
-                    for r in pq.ivfpq_search_persisted(
+                    for r in ivf.search_persisted(
                         spark, f"{base}/{name}", q, nprobe=4, k=10
                     ).collect()
                 }
@@ -304,7 +304,7 @@ class TestResidualIVFPQ:
         q = clustered.where(F.col("vec_id") == 7).select(
             F.col("embedding").alias("query_vec")
         )
-        got = pq.ivfpq_search_persisted(
+        got = ivf.search_persisted(
             spark, f"{base}/i", q, nprobe=16, k=10
         ).collect()
         vecs = {
@@ -327,7 +327,7 @@ class TestResidualIVFPQ:
         q = clustered.where(F.col("vec_id") == 3).select(
             F.col("embedding").alias("query_vec")
         )
-        out = pq.ivfpq_search_persisted(spark, f"{base}/i", q, nprobe=4, k=5)
+        out = ivf.search_persisted(spark, f"{base}/i", q, nprobe=4, k=5)
         assert out.count() == 5
 
     def test_train_watermark_keeps_residual_flag(
@@ -349,7 +349,7 @@ class TestResidualIVFPQ:
         def search():
             return [
                 (r.vec_id, r.score)
-                for r in pq.ivfpq_search_persisted(
+                for r in ivf.search_persisted(
                     spark, path, q, nprobe=4, k=5
                 ).collect()
             ]
@@ -387,7 +387,7 @@ class TestResidualIVFPQ:
                 F.col("embedding").alias("query_vec")
             )
             got, want = (
-                pq.ivfpq_search_persisted(
+                ivf.search_persisted(
                     spark, f"{base}/{name}", q, nprobe=16, k=10
                 ).collect()
                 for name in ("inc", "full")

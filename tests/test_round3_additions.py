@@ -676,7 +676,7 @@ class TestIVFBinaryPersisted:
         got = [
             (r.vec_id, r.hamming)
             for r in binary.ivfbin_search_persisted(
-                spark, bin_index, q, qc, nprobe=8, k=10
+                spark, bin_index, q, nprobe=8, k=10
             ).collect()
         ]
         flat = binary.binarize(emb)

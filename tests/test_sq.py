@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from faiss_vector_search_spark import io as fio
 from faiss_vector_search_spark.functions import vector as V
-from faiss_vector_search_spark.operators import sq
+from faiss_vector_search_spark.operators import ivf, sq
 
 
 @pytest.fixture(scope="module")
@@ -156,7 +156,7 @@ class TestIVFSQPersisted:
         assert "PartitionFilters" in plan and "list_id" in plan
         got = {r.list_id for r in probed.select("list_id").distinct().collect()}
         assert got == set(probes) and len(got) == 2
-        out = sq.ivfsq_search_persisted(spark, index_path, q, nprobe=2, k=10)
+        out = ivf.search_persisted(spark, index_path, q, nprobe=2, k=10)
         assert out.count() == 10
 
     def test_full_probe_equals_flat_sq(self, spark, emb, bounds, codes, index_path):
@@ -165,7 +165,7 @@ class TestIVFSQPersisted:
         )
         got = [
             (r.vec_id, r.score)
-            for r in sq.ivfsq_search_persisted(
+            for r in ivf.search_persisted(
                 spark, index_path, q, nprobe=8, k=10
             ).collect()
         ]
@@ -192,7 +192,7 @@ class TestIVFSQPersisted:
                 F.col("list_id").isin(*probe_ids)
             ).collect()
         }
-        out = sq.ivfsq_search_persisted(spark, index_path, q, nprobe=2, k=10)
+        out = ivf.search_persisted(spark, index_path, q, nprobe=2, k=10)
         assert {r.vec_id for r in out.collect()} <= allowed
 
 

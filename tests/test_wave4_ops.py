@@ -507,7 +507,7 @@ class TestIvfBatchPersisted:
             q1 = emb.where(F.col("vec_id") == qid).select(
                 F.col("embedding").alias("query_vec")
             )
-            solo = ivf_mod.ivf_search_persisted(
+            solo = ivf_mod.search_persisted(
                 spark, path, q1, nprobe=3, k=5
             ).collect()
             want = [(i + 1, r["vec_id"], r["score"]) for i, r in enumerate(solo)]
