@@ -7,20 +7,18 @@ wrap the model in an Arrow-batched ``mapInPandas`` (GPU executors,
 batch_size from config — see `sources/multimodal.py` for the stub
 pattern). What we ship instead is a *feature-hashing* embedder: token
 → md5-bucket → per-bucket counts → optional L2 normalize. It is fully
-deterministic, cross-engine reproducible (oracle-able), and exercises
-the exact same Spark plumbing (explode → groupBy → dense vector
-assembly) a learned embedder's preprocessing would.
+deterministic and cross-engine reproducible (oracle-able).
 
-Scale: explode+groupBy(doc_id, bucket) has map-side partial
-aggregation; the dense-assembly groupBy(doc_id) shuffles one row per
-(doc, distinct bucket) — ~tokens-bounded, not dim-bounded.
+Scale: a per-row map with no shuffle — each row tokenizes and hashes
+its text once, and callers carry other columns through ``keep_cols``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import vector as V
 from ..functions.hashing import hashed
 from ..functions.text import tokens
 
@@ -46,6 +44,27 @@ def token_buckets(
     )
 
 
+def _hash_vectors(
+    text: Column, dim: int, hash_fn: str, normalize: bool
+) -> Column:
+    """One row's embedding as ``[]`` (NULL text or no token) or
+    ``[vector]``. Each stage is let-bound as the lambda variable of a
+    transform over a one-element array (as in ``V.normalize``): lambdas
+    get no common-subexpression elimination, so buckets named inside
+    the per-dimension lambda would be re-hashed once per dimension."""
+    buckets = F.transform(
+        tokens(text), lambda t: F.pmod(hashed(t, 0, hash_fn), dim)
+    )
+    counts = F.transform(
+        F.filter(F.array(buckets), lambda b: F.size(b) > 0),
+        lambda b: F.transform(
+            F.sequence(F.lit(0), F.lit(dim - 1)),
+            lambda i: F.size(F.filter(b, lambda x: x == i)).cast("double"),
+        ),
+    )
+    return F.transform(counts, V.normalize) if normalize else counts
+
+
 def embed_documents(
     docs: DataFrame,
     dim: int = 64,
@@ -60,10 +79,11 @@ def embed_documents(
     """(doc_id, embedding: array<double>) — L2-normalized like
     encode(normalize_embeddings=True).
 
-    ``keep_cols`` (model="numpy" only): extra input columns forwarded
-    through the Arrow slot unchanged — lets a two-stage caller carry
-    its stage-1 score through the model pass instead of re-joining the
-    corpus-scale stage-1 plan a second time.
+    One row per input row, ``(id, embedding, *keep_cols)``; with the
+    hash model a row whose text is NULL or has no token gives none.
+    ``keep_cols`` (hash or numpy model) are input columns forwarded
+    unchanged beside the vector, so a caller carries chunk text or a
+    stage-1 score through the embedding instead of joining it back.
 
     ``model`` selects the embedding implementation:
 
@@ -89,41 +109,35 @@ def embed_documents(
       re-run the invariance + self-retrieval gates against it.
       ``dim`` is ignored (the checkpoint fixes the width).
     """
+    missing = [c for c in keep_cols if c not in docs.columns]
+    if missing:
+        # fail at plan-build time with the column named, not as an
+        # opaque executor-side KeyError from the model slot
+        raise ValueError(
+            f"keep_cols not in docs: {missing} (have {docs.columns})"
+        )
     if model == "numpy":
         return _embed_documents_numpy(
             docs, dim, id_col, text_col, batch_size, keep_cols
         )
-    if keep_cols:
-        raise ValueError("keep_cols is only supported with model='numpy'")
     if model.startswith("st:"):
+        if keep_cols:
+            raise ValueError("keep_cols is not supported with model='st:...'")
         return _embed_documents_st(
             docs, model[3:], id_col, text_col, batch_size
         )
     if model != "hash":
         raise ValueError(f"unknown embed model: {model}")
-    long = token_buckets(docs, dim, id_col, text_col, hash_fn)
-    dense = (
-        long.groupBy(id_col)
-        .agg(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct("bucket", "cnt")))
-            ).alias("m")
-        )
-        .select(
-            F.col(id_col),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(dim - 1)),
-                lambda i: F.coalesce(
-                    F.element_at(F.col("m"), i.cast("bigint")), F.lit(0)
-                ).cast("double"),
-            ).alias("embedding"),
-        )
+    # explode of the 0- or 1-element array drops the no-token rows; a
+    # filter on the vector would be pushed below the projection and
+    # evaluate the embedding twice
+    return docs.select(
+        F.col(id_col),
+        F.explode(
+            _hash_vectors(F.col(text_col), dim, hash_fn, normalize)
+        ).alias("embedding"),
+        *keep_cols,
     )
-    if normalize:
-        from ..functions.vector import normalize as l2norm
-
-        dense = dense.withColumn("embedding", l2norm(F.col("embedding")))
-    return dense
 
 
 def _mlp_weights():
@@ -144,7 +158,7 @@ def _mlp_weights():
 
 def hash_featurize(texts, dim: int, hash_fn: str = "md5"):
     """Python hash featurization shared by every numpy model slot and
-    the driver-side query embedding: EXACTLY
+    the driver-side query paths: EXACTLY
     ``pmod(functions.hashing.hashed(tok, 0, hash_fn), dim)`` — the same
     bucket the JVM feature-hash embedder assigns, so a numpy model's
     input features equal the declarative baseline's. Returns the raw
@@ -203,10 +217,8 @@ def query_embedding_hash(
     for bit the row :func:`embed_documents` (model="hash") gives it —
     same buckets, same sequential normalize fold. None for a text with
     no token, for which the JVM embedder emits no row."""
-    from ..functions.vector import normalize_vec
-
     x = hash_featurize([query_text], dim, hash_fn)[0]
-    return normalize_vec(x).tolist() if x.any() else None
+    return V.normalize_vec(x).tolist() if x.any() else None
 
 
 def _embed_documents_numpy(
@@ -217,14 +229,6 @@ def _embed_documents_numpy(
     forward INSIDE the Arrow batch iterator, mirroring how a
     sentence-transformers worker consumes text batches. Weights load
     once per python worker (closure capture), not per batch."""
-    missing = [c for c in keep_cols if c not in docs.columns]
-    if missing:
-        # fail at plan-build time with the column named — silently
-        # dropping it from the schema surfaced as an opaque
-        # executor-side KeyError (ADVICE r11)
-        raise ValueError(
-            f"keep_cols not in docs: {missing} (have {docs.columns})"
-        )
     import pandas as pd
 
     weights = _mlp_weights()
@@ -340,20 +344,16 @@ def text_search(
     (no float summation order to drift).
 
     Plan shape (the r7-proven :func:`text_search_multi` engine at
-    |Q| = 1): the query's sparse bucket counts are computed with the
-    SAME Spark expressions on a 1-row frame and collected (≤ dim tiny
-    rows), then ride the plan as a LITERAL bucket→count map — so the
+    |Q| = 1): the query's sparse bucket counts come from the driver's
+    :func:`hash_featurize` (the JVM tokenizer's twin, no Spark job)
+    and ride the plan as a LITERAL bucket→count map — so the
     corpus side is ONE partial-aggregated groupBy computing norm and
     dot together with zero joins (no broadcast exchange, no
     corpus-vs-query-norm crossJoin), and the final cut compiles to
     TakeOrderedAndProject. Results are hash-identical to the former
     broadcast-join form (integer arithmetic, same rounding)."""
-    spark = docs.sparkSession
-    qdf = spark.createDataFrame([(0, query_text)], f"qid int, {text_col} string")
-    bmap = {
-        int(r["bucket"]): int(r["cnt"])
-        for r in token_buckets(qdf, dim, "qid", text_col, hash_fn).collect()
-    }
+    x = hash_featurize([query_text], dim, hash_fn)[0]
+    bmap = {b: int(c) for b, c in enumerate(x) if c}
     if not bmap:  # empty/stopword-only query: no bucket can match
         return docs.select(F.col(id_col)).limit(0).select(
             F.col(id_col), F.lit(0.0).alias("score")
@@ -407,21 +407,15 @@ def text_search_multi(
     |Q|.
 
     ``queries`` is a sequence of (tag, text). Each query's sparse
-    bucket counts are computed with the SAME Spark expressions
-    (:func:`token_buckets` on the |Q|-row query frame) and collected
-    driver-side (≤ |Q|·dim tiny rows); they come back as literal
+    bucket counts come from :func:`hash_featurize` on the driver (the
+    JVM tokenizer's twin, no Spark job) and enter the plan as literal
     bucket→count maps, so the single per-doc aggregation computes
     every query's dot product AND the doc norm in one shuffle —
     ``stack`` then unpivots the |Q| dot columns and a per-tag rank
     window takes top-k over only the dot>0 survivors. Output:
     (query_tag, id, score).
     """
-    spark = docs.sparkSession
     qlist = list(queries)
-    if not qlist:
-        return docs.select(F.col(id_col)).limit(0).select(
-            F.lit("").alias(tag_col), F.col(id_col), F.lit(0.0).alias("score")
-        )
     dup_tags = sorted({t for t, _ in qlist
                        if sum(1 for t2, _ in qlist if t2 == t) > 1})
     if dup_tags:
@@ -430,11 +424,9 @@ def text_search_multi(
             f"queries sharing a tag would silently merge their bucket "
             f"counts and score BOTH wrong; give every query a unique tag"
         )
-    qdf = spark.createDataFrame(qlist, f"{tag_col} string, {text_col} string")
-    qb_rows = token_buckets(qdf, dim, tag_col, text_col, hash_fn).collect()
-    per_tag: dict[str, dict[int, int]] = {t: {} for t, _ in qlist}
-    for r in qb_rows:
-        per_tag[r[tag_col]][int(r["bucket"])] = int(r["cnt"])
+    counts = hash_featurize([q for _, q in qlist], dim, hash_fn)
+    per_tag = {t: {b: int(c) for b, c in enumerate(x) if c}
+               for (t, _), x in zip(qlist, counts)}
     tags = sorted(t for t, m in per_tag.items() if m)  # empty queries drop
     if not tags:
         return docs.select(F.col(id_col)).limit(0).select(
@@ -611,16 +603,17 @@ def chunk_text_search_ivf(
             F.col(id_col).alias("d"), F.col("chunk_id").alias("c")
         ).alias("_ckey"),
         F.col("chunk"),
-    ).localCheckpoint()
-    # The chunk frame and its embeddings are each consumed by several
-    # plan branches (centroid seeding, list assignment, scoring, text
-    # join-back) — localCheckpoint materializes the chunk INDEX once,
-    # the in-memory stand-in for the persisted index build
+    )
+    # The embedded chunks (text carried beside each vector) feed
+    # several plan branches (centroid seeding, list assignment,
+    # scoring, the hits' text) — localCheckpoint materializes the chunk
+    # INDEX once, the in-memory stand-in for the persisted index build
     # (index_store.save_index + partition-pruned probes) a real
     # deployment amortizes; without it the chunker and embedder
     # re-run per branch (measured 9.3 s -> materialized once).
     cemb = embed_documents(
-        keyed, dim=dim, id_col="_ckey", text_col="chunk", hash_fn=hash_fn
+        keyed, dim=dim, id_col="_ckey", text_col="chunk", hash_fn=hash_fn,
+        keep_cols=("chunk",),
     ).localCheckpoint()
     spark = docs.sparkSession
     qdf = spark.createDataFrame([(0, query_text)], f"qid int, {text_col} string")
@@ -632,7 +625,7 @@ def chunk_text_search_ivf(
         metric="ip", id_col="_ckey",
     )
     return (
-        keyed.join(F.broadcast(hits), "_ckey")
+        cemb.join(F.broadcast(hits), "_ckey")
         .select(
             F.col("_ckey.d").alias(id_col),
             F.col("_ckey.c").alias("chunk_id"),
@@ -655,8 +648,9 @@ def _chunk_index_rows(
     id_col: str,
     text_col: str,
 ) -> DataFrame:
-    """(struct chunk key, chunk text, embedding) rows — the shared
-    build/append head of the persisted chunk index."""
+    """(struct chunk key, embedding, chunk text) rows — the shared
+    build/append head of the persisted chunk index. The chunker runs
+    once and each chunk's text rides its own embedding row."""
     from .chunking import chunk_greedy
 
     chunks = chunk_greedy(
@@ -668,10 +662,13 @@ def _chunk_index_rows(
         ).alias("_ckey"),
         F.col("chunk"),
     )
-    cemb = embed_documents(
-        keyed, dim=dim, id_col="_ckey", text_col="chunk", hash_fn=hash_fn
-    )
-    return cemb.join(keyed, "_ckey")
+    # the exchange on the chunk key hands the list writer coalesced
+    # partitions; without it each input partition writes a file per
+    # list (31 files instead of 16 and 19% more bytes, 300 docs)
+    return embed_documents(
+        keyed, dim=dim, id_col="_ckey", text_col="chunk", hash_fn=hash_fn,
+        keep_cols=("chunk",),
+    ).repartition("_ckey")
 
 
 def chunk_index_build(
@@ -699,12 +696,11 @@ def chunk_index_build(
     reference stores chunk content in its index metadata for exactly
     this reason: the serving path answers from ONE partition-pruned
     scan, no join back to the corpus at query time. Build cost is the
-    one-time chunk+embed+assign pass a real deployment amortizes —
-    including one corpus-sized shuffle join reattaching chunk text to
-    the aggregated embeddings (the cost class of every index build;
-    the embedding groupBy already partitions one side by the chunk
-    key, and the SERVING path never joins). Appends go through
-    :func:`chunk_index_append` and touch only their lists.
+    one-time chunk+embed+assign pass a real deployment amortizes: the
+    chunker runs once, each chunk is embedded in its own row with its
+    text beside it, and one exchange on the chunk key feeds the list
+    writer. Appends go through :func:`chunk_index_append` and touch
+    only their lists.
     """
     from . import ivf as ivf_mod
     from . import lifecycle

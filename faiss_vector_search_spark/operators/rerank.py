@@ -246,10 +246,9 @@ def model_rerank(
     # forward the kernel runs) and folds into the plan as a literal:
     # the former 1-row createDataFrame → mapInPandas → broadcast →
     # crossJoin chain spent a whole Python stage per call on it
-    qv = embed_mod.query_embedding_numpy(query_text, dim)
-    qlit = F.array(*[F.lit(float(x)) for x in qv])
     from ..functions import vector as V
 
+    qlit = V.literal(embed_mod.query_embedding_numpy(query_text, dim))
     rescored = demb.select(
         F.col(id_col),
         F.col("score_stage1"),

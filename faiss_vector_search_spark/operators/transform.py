@@ -29,6 +29,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import vector as V
+
 
 class PCAModel(NamedTuple):
     mean: np.ndarray          # (d,)
@@ -88,12 +90,12 @@ def pca_apply(
 
     The model folds into the plan as literals — the whole projection
     is codegen'd column arithmetic over the scan."""
-    mean_lit = F.array(*[F.lit(float(m)) for m in model.mean])
     centered = F.zip_with(
-        F.col(vec_col).cast("array<double>"), mean_lit, lambda x, m: x - m
+        F.col(vec_col).cast("array<double>"), V.literal(model.mean),
+        lambda x, m: x - m,
     )
     def proj(j):
-        comp = F.array(*[F.lit(float(c)) for c in model.components[:, j]])
+        comp = V.literal(model.components[:, j])
         return F.aggregate(
             F.zip_with(centered, comp, lambda x, c: x * c),
             F.lit(0.0),
@@ -257,7 +259,7 @@ def opq_rotate_query(
         F.aggregate(
             F.zip_with(
                 vec,
-                F.array(*[F.lit(float(v)) for v in model.rotation[j]]),
+                V.literal(model.rotation[j]),
                 lambda x, r: x * r,
             ),
             F.lit(0.0),

@@ -56,7 +56,8 @@ def build_index_from_dir(
     """The reference's IndexManager.build pipeline, declaratively:
     read dir → greedy-chunk → feature-hash embed → index rows
     ``(vec_id, doc_id, chunk_id, chunk, embedding)`` ready for
-    ``index_store.save_index``. Everything stays one lazy plan — a
+    ``index_store.save_index``. Everything stays one lazy plan with no
+    shuffle (each chunk's ids and text ride its embedding row), so a
     1000-executor build needs no driver round-trips."""
     docs = read_text_dir(spark, path, glob)
     chunks = chunking.chunk_greedy(
@@ -70,10 +71,7 @@ def build_index_from_dir(
         "chunk_id",
         F.col("chunk"),
     )
-    vecs = embed.embed_documents(
-        keyed.select(F.col("vec_id"), F.col("chunk").alias("text")),
-        dim=dim,
-        id_col="vec_id",
-        hash_fn=hash_fn,
-    )
-    return keyed.join(vecs, "vec_id")
+    return embed.embed_documents(
+        keyed, dim=dim, id_col="vec_id", text_col="chunk", hash_fn=hash_fn,
+        keep_cols=("doc_id", "chunk_id", "chunk"),
+    ).select("vec_id", "doc_id", "chunk_id", "chunk", "embedding")

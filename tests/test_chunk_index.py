@@ -155,6 +155,41 @@ def test_driver_query_embedding_matches_jvm_embedder(spark, hash_fn):
     assert 0 not in jvm and 1 not in jvm
 
 
+@pytest.mark.parametrize("hash_fn", ["md5", "xxhash64"])
+def test_rows_sharing_an_id_embed_one_vector_each(spark, hash_fn):
+    """One vector per input text, like a model's encode(batch): two
+    rows with the same id are embedded apart, and keep_cols comes
+    through unchanged beside each vector."""
+    texts = ["stream batch window stream", "vector hash vector 42"]
+    df = spark.createDataFrame(
+        [(7, text, pos) for pos, text in enumerate(texts)],
+        "doc_id bigint, text string, pos int",
+    )
+    out = embed.embed_documents(df, hash_fn=hash_fn, keep_cols=("text", "pos"))
+    assert out.columns == ["doc_id", "embedding", "text", "pos"]
+    got = sorted(out.collect(), key=lambda r: r.pos)
+    assert [(r.doc_id, r.text, r.pos) for r in got] == [
+        (7, text, pos) for pos, text in enumerate(texts)
+    ]
+    for r in got:
+        assert list(r.embedding) == embed.query_embedding_hash(
+            r.text, 64, hash_fn
+        )
+
+
+def test_chunk_index_rows_chunk_once(docs):
+    """The build/append head runs the chunker once and joins nothing
+    back: chunk text rides its embedding row, and the one exchange is
+    the repartition on the chunk key that feeds the list writer."""
+    rows = embed._chunk_index_rows(
+        docs, 100, 250, 20, 64, "md5", "doc_id", "text"
+    )
+    plan = rows._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Join" not in plan and "Aggregate" not in plan, plan
+    assert plan.count("Exchange") == 1, plan
+
+
 def test_no_token_query_returns_no_rows(spark, docs, tmp_path):
     path = str(tmp_path / "idx")
     embed.chunk_index_build(docs, path, nlist=8)

@@ -216,6 +216,23 @@ def test_handle_serves_appended_chunks(spark, sf_small, tmp_path):
     assert (hits[0].doc_id, hits[0].score) == (new_id, 1.0)
 
 
+def test_chunk_append_runs_at_most_eight_jobs(spark, sf_small, tmp_path):
+    """A 10-doc chunk append chunks and embeds its batch in one pass:
+    no join back to the chunk text, so no second chunker run."""
+    docs = fio.load_table(spark, sf_small, "documents")
+    path = str(tmp_path / "chunks")
+    embed.chunk_index_build(
+        docs.where(F.col("doc_id") >= 10), path, nlist=NLIST
+    )
+    batch = docs.where(F.col("doc_id") < 10)
+    assert batch.count() == 10
+
+    def append():
+        assert embed.chunk_index_append(spark, path, batch)
+
+    assert _jobs(spark, append) <= 8
+
+
 def test_warm_persisted_queries_run_one_job(
     spark, sf_small, emb, cents, tmp_path
 ):

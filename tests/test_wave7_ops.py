@@ -131,6 +131,16 @@ class TestMultiQueryRetrieval:
             )
             assert got[tag] == single, tag
 
+    def test_multi_without_scorable_queries_is_empty(self, spark, sf_small):
+        from faiss_vector_search_spark.io import load_table
+        from faiss_vector_search_spark.operators import embed
+
+        docs = load_table(spark, sf_small, "documents")
+        for queries in ([], [("q", "!!! ...")]):
+            df = embed.text_search_multi(docs, queries, dim=64, k=5)
+            assert df.columns == ["query_tag", "doc_id", "score"]
+            assert df.collect() == []
+
     def test_multi_is_one_corpus_aggregation(self, spark, sf_small):
         from faiss_vector_search_spark.io import load_table
         from faiss_vector_search_spark.operators import embed
